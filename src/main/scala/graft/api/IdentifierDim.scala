@@ -2,7 +2,8 @@ package graft.api
 
 import graft.Tables
 import graft.operators.Joins
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 
 /** Materialized identifier dimensions for the request interpreter — the
@@ -28,11 +29,19 @@ import org.apache.spark.sql.functions._
   * build. Real version chains are short (the reference caps resolution at
   * depth 20, `pid_resolution.py:236`); the synthetic u−50 chains grow with
   * the id domain, which pointer jumping absorbs in O(log depth) rounds.
+  *
+  * The same per-(session, dir) cache also holds the resolved events
+  * relation ([[events]]): the partition listing and parquet schema
+  * inference run once, not on every request. Only the handle is kept (no
+  * cache, no checkpoint), so it pins no blocks; but its file listing is
+  * fixed at resolution, so files appended to the directory stay invisible
+  * to the API until [[invalidate]].
   */
 object IdentifierDim {
 
-  /** Built dims keyed by (session UUID, table dir, dim name): the
-    * materialized-dimension analogue of the reference's sync-job output.
+  /** Built dims — and the resolved events relation — keyed by (session
+    * UUID, table dir, name): the materialized-dimension analogue of the
+    * reference's sync-job output.
     * The session UUID is stable and never reused (unlike identityHashCode,
     * which can collide after a session is GC'd and would then serve another
     * session's plan).
@@ -56,7 +65,8 @@ object IdentifierDim {
     sessionIds.computeIfAbsent(spark,
       _ => java.util.UUID.randomUUID().toString)
 
-  private def cached(spark: SparkSession, dir: String, which: String)
+  private def cached(spark: SparkSession, dir: String, which: String,
+                     pin: Boolean = true)
                     (build: => DataFrame): DataFrame = {
     sweep()
     val key = (sessionKey(spark), dir, which)
@@ -67,7 +77,7 @@ object IdentifierDim {
         // and silently drop one result — whose checkpoint blocks would pin
         // the block manager forever. Build outside the map, then let
         // putIfAbsent decide; the loser unpersists its own build.
-        val built = build.localCheckpoint()
+        val built = if (pin) build.localCheckpoint() else build
         cache.putIfAbsent(key, (spark, built)) match {
           case Some((_, winner)) => release(built); winner
           case None => built
@@ -83,11 +93,32 @@ object IdentifierDim {
                   (build: => DataFrame): DataFrame =
     cached(spark, dir, s"ext:$name")(build)
 
+  /** Like [[materialized]], for a result small enough to hold on the
+    * driver: built once per (session, dir) and kept as a local relation,
+    * so reading it runs no Spark job and pins no blocks. */
+  def collected(spark: SparkSession, dir: String, name: String)
+               (build: => DataFrame): DataFrame =
+    cached(spark, dir, s"local:$name", pin = false) {
+      val df = build
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*),
+        df.schema)
+    }
+
+  /** The events fact table ([[Tables.events]]) as resolved once per
+    * (session, dir): every later request plans against this handle instead
+    * of re-listing the partition directories and re-running the parquet
+    * schema-inference job. Unpinned — a plain scan whose plan re-optimizes
+    * per request; [[invalidate]] drops it so the next call re-lists. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    cached(spark, dir, "events", pin = false)(Tables.events(spark, dir))
+
   /** Release the local-checkpoint blocks a cached dim pins in the block
     * manager. localCheckpoint persists the underlying RDD, so the handle to
     * unpersist is that RDD (reached through the plan's LogicalRDD leaf), not
-    * the Dataset cache. Best-effort: on a stopped context unpersist throws
-    * (swallowed) — the blocks died with the executors already. */
+    * the Dataset cache. A frame without a LogicalRDD leaf (the unpinned
+    * events handle) has nothing to release. Best-effort: on a stopped
+    * context unpersist throws (swallowed) — the blocks died with the
+    * executors already. */
   private def release(df: DataFrame): Unit =
     try {
       df.queryExecution.optimizedPlan.collectLeaves().foreach {
@@ -105,8 +136,10 @@ object IdentifierDim {
       if (s.sparkContext.isStopped) cache.remove(k)
     }
 
-  /** Explicit eviction for one session (call on session close): removes its
-    * entries and unpersists their checkpoint blocks. */
+  /** Explicit eviction for one session (call on session close, or after
+    * files land in a table dir): removes its entries, unpersists their
+    * checkpoint blocks, and drops the resolved events relations so the next
+    * request re-lists the directory. */
   def invalidate(spark: SparkSession): Unit = {
     val key = sessionKey(spark)
     cache.keys.filter(_._1 == key).foreach { k =>
@@ -118,7 +151,7 @@ object IdentifierDim {
     * u−50 (null parent ⇒ chain head). Every id appears as a child, so the
     * root resolve can skip node discovery. */
   private def versionEdges(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir).select(col("user_id").as("child")).distinct()
+    events(spark, dir).select(col("user_id").as("child")).distinct()
       .withColumn("parent", when(col("child") >= 50, col("child") - 50))
 
   /** (user_id, family_id): each identifier mapped to its obsolescence-chain
@@ -137,29 +170,33 @@ object IdentifierDim {
     * p holds ids ≡ p mod 7; production loads the real membership rows). */
   def portalDim(spark: SparkSession, dir: String): DataFrame =
     cached(spark, dir, "portal") {
-      Tables.events(spark, dir).select(col("user_id")).distinct()
+      events(spark, dir).select(col("user_id")).distinct()
         .withColumn("portal_id", pmod(col("user_id"), lit(7)))
     }
 
-  /** All identifiers in the families of the requested ids: resolve the
-    * requested ids to family heads, then take every member of those
-    * families. Ids absent from the dimension pass through as singleton
-    * members — the reference falls back to filtering by the raw PID when
-    * the identifiers index has no entry for it. */
+  /** All identifiers in the families of the requested ids: the dim rows
+    * whose family is one of the requested ids' families, plus the requested
+    * ids themselves. Ids absent from the dimension thus pass through as
+    * singleton members — the reference falls back to filtering by the raw
+    * PID when the identifiers index has no entry for it — and an id present
+    * in the dim is already its own family's member (every dim row has a
+    * non-null root), so the union adds no id outside the families. The
+    * result may repeat ids; it feeds a semi-join, which ignores that.
+    *
+    * The families come from an [[inIds]] filter on the checkpointed dim,
+    * the members from one broadcast left-semi join against it, and the ids
+    * are a local relation with exact stats: the plan reads no fact table
+    * and needs no shuffle and no `distinct`. */
   def familyMembers(spark: SparkSession, dir: String,
                     ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
     val dim = familyDim(spark, dir)
-    val requested = dim.filter(col("user_id").isin(ids: _*))
-      .select(col("family_id")).distinct()
-    val resolved = dim.join(broadcast(requested), Seq("family_id"))
+    val requested = ids.toDF("user_id")
+    val families = dim.filter(inIds(col("user_id"), ids))
+      .select(col("family_id"))
+    dim.join(broadcast(families), Seq("family_id"), "left_semi")
       .select(col("user_id"))
-    val raw = spark.createDataFrame(
-      spark.sparkContext.parallelize(ids.map(org.apache.spark.sql.Row(_)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    val unresolved = raw.join(dim, Seq("user_id"), "left_anti")
-    resolved.union(unresolved)
+      .union(requested)
   }
 
   /** (user_id, node_id, country) attribution dimension — the reference's
@@ -173,7 +210,7 @@ object IdentifierDim {
     * constant-folded array lookup on the fact side. */
   def nodeDim(spark: SparkSession, dir: String): DataFrame =
     cached(spark, dir, "node") {
-      Tables.events(spark, dir).select(col("user_id")).distinct()
+      events(spark, dir).select(col("user_id")).distinct()
         .withColumn("node_id",
           graft.reports.CounterReport.nodeOf(col("user_id")))
         .withColumn("country",
@@ -184,6 +221,17 @@ object IdentifierDim {
   def portalMembers(spark: SparkSession, dir: String,
                     portals: Seq[Long]): DataFrame =
     portalDim(spark, dir)
-      .filter(col("portal_id").isin(portals.map(p => ((p % 7) + 7) % 7): _*))
+      .filter(inIds(col("portal_id"), portals.map(p => ((p % 7) + 7) % 7)))
       .select(col("user_id"))
+
+  /** `c IN (ids)` as Spark's set-valued `InSet`, the form the optimizer
+    * itself gives lists longer than ten values. A short `isin` list stays
+    * an `In`, whose values are compiled into the generated code as
+    * literals, so each id list would need a class of its own; `InSet`
+    * holds its values as a reference, so every request of a shape shares
+    * one class in Spark's codegen cache (100 entries by default) instead
+    * of evicting the others'. It still reaches the parquet scan as an
+    * `In` pushdown. */
+  private[api] def inIds(c: Column, ids: Seq[Long]): Column =
+    GraftShims.column(InSet(GraftShims.expression(c), ids.toSet[Any]))
 }

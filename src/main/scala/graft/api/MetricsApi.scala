@@ -3,7 +3,6 @@ package graft.api
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
-import graft.Tables
 import graft.operators.MetricsKernel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -57,7 +56,12 @@ object MetricsApi {
     if (req.metrics.isEmpty)
       throw new IllegalArgumentException("metrics must be non-empty")
 
-    val events = Tables.events(spark, dir)
+    // resolved once per (session, dir): no listing or schema-inference
+    // job per request
+    val events = IdentifierDim.events(spark, dir)
+    // the engine's bronze layout (Ingest.writeBronze) is partitioned by
+    // event_date; the flat layout of the generated tables has none
+    val datePartitioned = events.columns.contains("event_date")
 
     // catalog/package selects the per-entity response SHAPE; every other
     // filter still applies — silently ignoring a time range would serve
@@ -72,7 +76,9 @@ object MetricsApi {
           // the materialized identifiers dimension, then keep any family
           // member via a broadcast semi-join (`metricsreader.py:1259-1343`)
           // — the fact scan is filtered by a BroadcastHashJoin, exactly the
-          // plan a 1000-executor run needs (no modulo shortcut)
+          // plan a 1000-executor run needs (no modulo shortcut). The member
+          // frame reads only the checkpointed dim and the request's ids, so
+          // the fact table is scanned once and nothing shuffles.
           val members = IdentifierDim.familyMembers(spark, dir,
             f.values.map(parseLong("dataset", _)))
           df.join(broadcast(members), Seq("user_id"), "left_semi")
@@ -81,7 +87,7 @@ object MetricsApi {
           // scan); a string-side cast on the column would block pushdown
           val numeric = f.values.flatMap(v => scala.util.Try(v.toLong).toOption)
           if (numeric.length == f.values.length)
-            df.filter(col("user_id").isin(numeric: _*))
+            df.filter(IdentifierDim.inIds(col("user_id"), numeric))
           else df.filter(col("user_id").cast("string").isin(f.values: _*))
         case ("eventType", "list") =>
           df.filter(col("event_type").isin(f.values: _*))
@@ -106,8 +112,14 @@ object MetricsApi {
               s"${f.filterType} range filter needs [start, end], " +
                 s"got ${f.values.length} value(s)")
           val Seq(a, b) = f.values.take(2).map(isoDate)
-          df.filter(col("ts") >= to_date(lit(a)) &&
-            col("ts") < date_add(to_date(lit(b)), 1))
+          val (lo, hi) = (to_date(lit(a)), to_date(lit(b)))
+          // event_date = to_date(ts) under the pinned UTC zone, so the
+          // partition bounds select exactly the rows the ts bounds keep:
+          // the scan skips every other day's files, and the bounds stay
+          // out of the generated code (ts literals would be compiled into
+          // it, one class per range)
+          df.filter(if (datePartitioned) col("event_date").between(lo, hi)
+            else col("ts") >= lo && col("ts") < date_add(hi, 1))
         case ("portal", "list") =>
           // F4: portal membership via the flattened portalIdentifier[]
           // dimension, broadcast semi-joined against the fact side
@@ -186,7 +198,8 @@ object MetricsApi {
     val aggs = metrics.flatMap(m => MetricTypes.get(m).map { t =>
       countDistinct(when(col("event_type") === t, col("event_id"))).as(m)
     })
-    events.filter(col("user_id").isin(ids.map(parseLong("catalog", _)): _*))
+    events.filter(IdentifierDim.inIds(col("user_id"),
+        ids.map(parseLong("catalog", _))))
       .groupBy(col("user_id").as("entity"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -201,34 +214,47 @@ object MetricsApi {
     * Unbounded-domain filter types (dataset/user ids, time ranges) are
     * validated by the interpreter rather than enumerated, like the
     * reference's catalog. Domains are dimension-table-sized (a handful of
-    * rows each), so the whole catalog is a cheap union of distincts over
-    * already-checkpointed dims — no fact-table rescan beyond the
-    * event-type distinct. */
-  def filtersCatalog(spark: SparkSession, dir: String): DataFrame = {
-    val node = IdentifierDim.nodeDim(spark, dir)
-    Tables.events(spark, dir)
-      .select(lit("eventType").as("filter_type"),
-        col("event_type").as("value")).distinct()
-      .unionByName(node.select(lit("repository").as("filter_type"),
-        col("node_id").as("value")).distinct())
-      .unionByName(node.select(lit("country").as("filter_type"),
-        col("country").as("value")).distinct())
-      .unionByName(IdentifierDim.portalDim(spark, dir)
-        .select(lit("portal").as("filter_type"),
-          concat(lit("portal-"), col("portal_id").cast("string")).as("value"))
-        .distinct())
-  }
+    * rows each), so the whole catalog is one distinct over the union of
+    * the four sources — the filter types are disjoint, so that is the same
+    * row set as a distinct per source, in one aggregation instead of four.
+    * The catalog depends only on the data, so it is built once per
+    * (session, dir) and held on the driver ([[IdentifierDim.collected]]),
+    * with the dims' lifecycle: a request reads the local rows without a
+    * Spark job, and files appended to the directory show after
+    * `IdentifierDim.invalidate`. */
+  def filtersCatalog(spark: SparkSession, dir: String): DataFrame =
+    IdentifierDim.collected(spark, dir, "filters") {
+      val node = IdentifierDim.nodeDim(spark, dir)
+      IdentifierDim.events(spark, dir)
+        .select(lit("eventType").as("filter_type"),
+          col("event_type").as("value"))
+        .unionByName(node.select(lit("repository").as("filter_type"),
+          col("node_id").as("value")))
+        .unionByName(node.select(lit("country").as("filter_type"),
+          col("country").as("value")))
+        .unionByName(IdentifierDim.portalDim(spark, dir)
+          .select(lit("portal").as("filter_type"),
+            concat(lit("portal-"), col("portal_id").cast("string"))
+              .as("value")))
+        .distinct()
+    }
 
   /** The reference's column-oriented response shape: one row of parallel
     * arrays ordered by period, plus the `resultDetails` totals
-    * (`metricsreader.py:315-323,1609-1615,1810-1814`). */
+    * (`metricsreader.py:315-323,1609-1615,1810-1814`). The totals fold the
+    * collected count arrays (null for no period, as `sum` gives), so the
+    * object-hash aggregation holds `collect_list` alone and compiles fewer
+    * projections per request. */
   def columnarResponse(longDf: DataFrame, metrics: Seq[String]): DataFrame = {
     val ordered = sort_array(collect_list(struct(
       col("period") +: metrics.map(col): _*))).as("r")
-    val totals = metrics.map(m => sum(col(m)).as(s"total_$m"))
+    val totals = metrics.map { m =>
+      val counts = filter(col(s"r.$m"), _.isNotNull)
+      when(size(counts) > 0,
+        aggregate(counts, lit(0L), (acc, x) => acc + x)).as(s"total_$m")
+    }
     val arrays = col("r.period").as("periods") +:
-      (metrics.map(m => col(s"r.$m").as(m)) ++
-        metrics.map(m => col(s"total_$m")))
-    longDf.agg(ordered, totals: _*).select(arrays: _*)
+      (metrics.map(m => col(s"r.$m").as(m)) ++ totals)
+    longDf.agg(ordered).select(arrays: _*)
   }
 }

@@ -1111,11 +1111,16 @@ object Joins {
     // spine is needed for the zero-filled output anyway; counting it
     // here decides the regime from the carry's actual size. Lazy + the
     // count = one full-materialization job (the connectedComponents
-    // rule).
+    // rule). The count runs even when `hugeGraph` already decides the
+    // regime: it is what materializes the lazy checkpoint before the
+    // huge path releases `e0`, which the spine derives from (without
+    // AQE nothing else runs it early, and the read would then find the
+    // released blocks gone).
     val nodes = e0.select(col("src").as("node"))
       .unionAll(e0.select(col("dst").as("node"))).distinct()
       .localCheckpoint(false)
-    val huge = hugeGraph || nodes.count() > graphBroadcastMaxRows
+    val nNodes = nodes.count()
+    val huge = hugeGraph || nNodes > graphBroadcastMaxRows
     def hint(df: DataFrame): DataFrame = if (huge) df else broadcast(df)
     // huge regime: the a-round joins on src and the h-round on dst —
     // keep ONE pre-partitioned, pre-sorted edge checkpoint PER SIDE so

@@ -65,7 +65,9 @@ object MetricsKernel {
     // end's day-of-unit is earlier than start's, silently dropping its
     // aggregates in the left join. Typed columns (never string
     // interpolation): start/end come from user-controlled request JSON.
-    val spine = spark.range(1).select(explode(sequence(
+    // One row exploded needs one partition: a default-parallelism range
+    // would schedule a task per core, all but one of them empty.
+    val spine = spark.range(0, 1, 1, 1).select(explode(sequence(
       date_trunc(unit, to_date(lit(start))).cast("date"),
       to_date(lit(end)), expr(step))).as("d"))
       .select(periodOf(col("d"), unit).as("period"))

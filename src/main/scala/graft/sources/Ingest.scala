@@ -12,8 +12,13 @@ import org.apache.spark.sql.streaming.Trigger
   * date-range predicate of every metrics query (reference
   * `metricselasticsearch.py:1115-1123`) then prunes partitions at planning
   * time — the Spark analogue of the reference's time-sharded `eventlog-*`
-  * indexes. Dedup-by-id replaces the tail-trimming recovery logic: writes
-  * are idempotent, so at-least-once upstream delivery is safe.
+  * indexes. A predicate on `ts` alone does not prune (the partition column
+  * is derived, and Spark does not infer one from the other), so a reader
+  * must bound `event_date` instead: [[graft.api.MetricsApi]] turns a
+  * range over this layout into `event_date BETWEEN a AND b`, which is
+  * exact because `event_date` = `to_date(ts)` under the pinned UTC zone.
+  * Dedup-by-id replaces the tail-trimming recovery logic: writes are
+  * idempotent, so at-least-once upstream delivery is safe.
   */
 object Ingest {
 

@@ -6,6 +6,30 @@ import org.apache.spark.sql.functions._
 
 class ApiSpec extends SparkSpec {
 
+  /** Spark jobs `body` launches, tagged by a job group of its own so jobs
+    * of anything else running on the context do not count. */
+  private def jobsLaunched(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "spec-jobs-" + java.util.UUID.randomUUID()
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.TestListenerDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
   test("parse round-trips the reference request shape") {
     val req = MetricsApi.parse(
       """{"metrics": ["views"],
@@ -184,5 +208,131 @@ class ApiSpec extends SparkSpec {
       MetricsApi.interpret(spark, testDataDir, MetricsRequest(Seq("views"),
         Seq(MetricsFilter("catalog", Seq("not-an-id"), "list")), Seq()))
     }
+  }
+
+  test("familyMembers matches the resolve-then-anti-join formulation") {
+    import graft.api.IdentifierDim
+    // ids 0..149 form families {f, f+50, f+100} (the u−50 chains)
+    val dir = java.nio.file.Files.createTempDirectory("graft_api").toString
+    spark.range(150).select(col("id").as("event_id"),
+        timestamp_seconds(lit(1704067200L) + col("id")).as("ts"),
+        col("id").as("user_id"), lit("view").as("event_type"))
+      .write.parquet(s"$dir/events.parquet")
+    val s = spark.newSession()
+    import s.implicits._
+    try {
+      val dim = IdentifierDim.familyDim(s, dir)
+      // two ids from one family, one from another, one absent from the dim
+      val ids = Seq(3L, 103L, 7L, 1000L)
+      // the earlier formulation: resolve families with a distinct, join
+      // them back, and add the ids the dim lacks through an anti-join
+      val requested = dim.filter(col("user_id").isin(ids: _*))
+        .select(col("family_id")).distinct()
+      val old = dim.join(broadcast(requested), Seq("family_id"))
+        .select(col("user_id"))
+        .union(ids.toDF("user_id").join(dim, Seq("user_id"), "left_anti"))
+      def set(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.getLong(0)).toSet
+      val got = set(IdentifierDim.familyMembers(s, dir, ids))
+      assert(got == Set(3L, 53L, 103L, 7L, 57L, 107L, 1000L))
+      assert(got == set(old))
+    } finally IdentifierDim.invalidate(s)
+  }
+
+  test("a warm (session, dir) interprets without launching a Spark job") {
+    import graft.api.IdentifierDim
+    val s = spark.newSession()
+    def requests(): Unit = {
+      MetricsApi.interpret(s, testDataDir, MetricsRequest(Seq("views"),
+        Seq(MetricsFilter("dataset", Seq("3", "57"), "list"),
+          MetricsFilter("time", Seq("2024-01-01", "2024-02-29"), "range")),
+        Seq("month")))
+      MetricsApi.interpret(s, testDataDir, MetricsRequest(Seq("views"),
+        Seq(MetricsFilter("repository", Seq("urn:node:B"), "list")),
+        Seq("month")))
+      MetricsApi.interpret(s, testDataDir, MetricsRequest(Seq("views"),
+        Seq(MetricsFilter("portal", Seq("portal-2"), "list")), Seq("month")))
+      MetricsApi.filtersCatalog(s, testDataDir)
+    }
+    try {
+      // cold: listing, schema inference and the dim builds run jobs
+      assert(jobsLaunched(requests()) > 0)
+      assert(jobsLaunched(requests()) == 0,
+        "planning a request on a warm session must not run Spark jobs")
+    } finally IdentifierDim.invalidate(s)
+  }
+
+  test("each session resolves its own events relation") {
+    import graft.api.IdentifierDim
+    val s2 = spark.newSession()
+    val s3 = spark.newSession()
+    try {
+      val e2 = IdentifierDim.events(s2, testDataDir)
+      assert(IdentifierDim.events(s2, testDataDir) eq e2)
+      var e3: org.apache.spark.sql.DataFrame = null
+      assert(jobsLaunched { e3 = IdentifierDim.events(s3, testDataDir) } > 0,
+        "a second session must run its own resolution")
+      assert(!(e3 eq e2) && (e3.sparkSession eq s3))
+    } finally {
+      IdentifierDim.invalidate(s2)
+      IdentifierDim.invalidate(s3)
+    }
+  }
+
+  test("files added to the directory become visible after invalidate") {
+    import graft.api.IdentifierDim
+    val dir = java.nio.file.Files.createTempDirectory("graft_api").toString
+    val path = s"$dir/events.parquet"
+    val src = Tables.events(spark, testDataDir)
+    src.limit(100).write.parquet(path)
+    val s = spark.newSession()
+    try {
+      val n0 = IdentifierDim.events(s, dir).count()
+      src.limit(10).write.mode("append").parquet(path)
+      // the resolved listing is fixed until invalidate (documented)
+      assert(IdentifierDim.events(s, dir).count() == n0)
+      IdentifierDim.invalidate(s)
+      assert(IdentifierDim.events(s, dir).count() == n0 + 10)
+    } finally IdentifierDim.invalidate(s)
+  }
+
+  test("requests that differ only in their ids compile to the same code") {
+    // id lists reach the generated code as a set reference, not as
+    // literals: each shape compiles once, so a serving loop's classes fit
+    // Spark's codegen cache
+    def code(filter: MetricsFilter) = generatedCode(MetricsApi.interpret(
+      spark, testDataDir, MetricsRequest(Seq("views"), Seq(filter),
+        if (filter.filterType == "catalog") Seq() else Seq("month"))))
+    for ((kind, a, b) <- Seq(
+        ("dataset", Seq("3", "57"), Seq("4", "58")),
+        ("portal", Seq("portal-2"), Seq("portal-3")),
+        ("catalog", Seq("1", "2", "3"), Seq("4", "5", "6")))) {
+      val first = code(MetricsFilter(kind, a, "list"))
+      assert(first.nonEmpty)
+      assert(first == code(MetricsFilter(kind, b, "list")),
+        s"$kind: generated code depends on the requested ids")
+    }
+  }
+
+  test("the filters catalog is built once per (session, dir), read jobless") {
+    import graft.api.IdentifierDim
+    val s = spark.newSession()
+    try {
+      val first = MetricsApi.filtersCatalog(s, testDataDir)
+      assert(MetricsApi.filtersCatalog(s, testDataDir) eq first)
+      var types = Set.empty[String]
+      assert(jobsLaunched {
+        types = first.collect().map(_.getString(0)).toSet
+      } == 0, "reading the held catalog must not run a Spark job")
+      assert(types == Set("eventType", "repository", "country", "portal"))
+    } finally IdentifierDim.invalidate(s)
+  }
+
+  test("columnarResponse totals are null for an empty result, as sum is") {
+    import spark.implicits._
+    val empty = Seq.empty[(String, Long)].toDF("period", "views")
+    val row = MetricsApi.columnarResponse(empty, Seq("views")).head()
+    assert(row.getSeq[String](0).isEmpty)
+    assert(row.isNullAt(2))
   }
 }

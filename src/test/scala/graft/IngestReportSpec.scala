@@ -78,6 +78,35 @@ class IngestReportSpec extends SparkSpec {
     assert(scanned > 0 && scanned < total)
   }
 
+  test("api time ranges prune bronze event_date partitions") {
+    import graft.api.{MetricsApi, MetricsFilter, MetricsRequest}
+    val dir = tmpDir()
+    Ingest.writeBronze(Tables.events(spark, testDataDir), s"$dir/events.parquet")
+    val req = MetricsRequest(Seq("views", "downloads"),
+      Seq(MetricsFilter("time", Seq("2024-01-05", "2024-01-10"), "range")),
+      Seq("day"))
+    val df = MetricsApi.interpret(spark, dir, req)
+    // the bounds would otherwise be cut from the plan string
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    val plan = try df.queryExecution.executedPlan.toString
+      finally spark.conf.unset("spark.sql.maxMetadataStringLength")
+    val partitionFilters = "PartitionFilters: \\[([^\\]]*)\\]".r
+      .findFirstMatchIn(plan).map(_.group(1)).getOrElse("")
+    assert(partitionFilters.contains(">= 2024-01-05") &&
+      partitionFilters.contains("<= 2024-01-10"),
+      s"range bounds not in the partition filters:\n$plan")
+    // same answer as the flat layout, which filters on ts alone
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toString).sorted.toSeq
+    assert(rows(df) == rows(MetricsApi.interpret(spark, testDataDir, req)))
+    // the bounds live only in the partition filters, not in the generated
+    // code: another range of the same width compiles to the same classes
+    val other = req.copy(filterBy =
+      Seq(MetricsFilter("time", Seq("2024-01-08", "2024-01-13"), "range")))
+    assert(generatedCode(df) ==
+      generatedCode(MetricsApi.interpret(spark, dir, other)))
+  }
+
   test("streaming JSONL ingest is resumable and exactly-once") {
     val base = tmpDir()
     val src = s"$base/src"; val out = s"$base/out"; val cp = s"$base/cp"

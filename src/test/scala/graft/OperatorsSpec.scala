@@ -1646,6 +1646,27 @@ class OperatorsSpec extends SparkSpec {
       sGot("d") == ((250000L, 0L)), s"$sGot")
   }
 
+  test("hitsScores hugeGraph path survives with AQE off") {
+    // the huge path releases the edge checkpoint the node spine derives
+    // from; without AQE running stages early, the spine's lazy checkpoint
+    // must already be materialized by then or the read fails on the
+    // released blocks. A session of its own keeps the conf change local.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    import s.implicits._
+    val edges = Seq((1L, 2L), (3L, 2L), (2L, 4L), (1L, 2L), (4L, 4L))
+      .toDF("src", "dst")
+    val got = graft.operators.Joins.hitsScores(edges, rounds = 2,
+        hugeGraph = true)
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+      .toMap
+    assert(got == Map(
+      1L -> ((0L, 1000000L)),
+      2L -> ((1000000L, 250000L)),
+      3L -> ((0L, 1000000L)),
+      4L -> ((250000L, 0L))), s"$got")
+  }
+
   test("temperatureMixSqrt: closed-form rates, smallest source kept whole") {
     import spark.implicits._
     // counts: en 100, es 25, plus nulls (dropped) -> rates en 0.5, es 1.0

@@ -118,6 +118,18 @@ class PlanSpec extends SparkSpec {
     assert(!por.contains("% 7"), "portal filter still a modulo stand-in")
   }
 
+  test("api dataset family: members come from the dim alone, no shuffle join") {
+    // the family expansion reads the checkpointed dim and the request's ids
+    // (exact stats): no runtime bloom filter subquery rescanning the fact
+    // table and no sort-merge join, in the initial or the final plan
+    val df = SparkEntry.queries("api_dataset_family")(spark, testDataDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")
+    assert(!p.contains("bloom_filter_agg"), s"fact-table bloom subquery:\n$p")
+    assert(!p.contains("SortMergeJoin"), s"shuffle join:\n$p")
+  }
+
   test("counter report and api node paths join the broadcast node dim") {
     // node/country attribution is a materialized dimension joined with a
     // BroadcastHashJoin (J6) — the dim build's element_at/pmod formulas are

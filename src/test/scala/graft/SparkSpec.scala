@@ -9,6 +9,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   val testDataDir = "/root/testdata/sf0.001"
+
+  /** The whole-stage generated code of `df`, stage by stage: the bodies
+    * Spark's codegen cache is keyed by. Runs `df` first, so the adaptive
+    * plan is final and holds every stage. */
+  def generatedCode(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    def stages(p: SparkPlan): Seq[WholeStageCodegenExec] = p match {
+      case a: AdaptiveSparkPlanExec => stages(a.executedPlan)
+      case q: QueryStageExec => stages(q.plan)
+      case w: WholeStageCodegenExec => w +: w.children.flatMap(stages)
+      case other => other.children.flatMap(stages)
+    }
+    df.collect()
+    stages(df.queryExecution.executedPlan).map(_.doCodeGen()._2.body)
+  }
 }
 
 object SparkSpec {

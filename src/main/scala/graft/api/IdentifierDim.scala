@@ -113,20 +113,11 @@ object IdentifierDim {
     cached(spark, dir, "events", pin = false)(Tables.events(spark, dir))
 
   /** Release the local-checkpoint blocks a cached dim pins in the block
-    * manager. localCheckpoint persists the underlying RDD, so the handle to
-    * unpersist is that RDD (reached through the plan's LogicalRDD leaf), not
-    * the Dataset cache. A frame without a LogicalRDD leaf (the unpinned
-    * events handle) has nothing to release. Best-effort: on a stopped
-    * context unpersist throws (swallowed) — the blocks died with the
-    * executors already. */
+    * manager ([[Joins.unpersistLocalCheckpoint]]; the unpinned handles have
+    * nothing to release). Best-effort: on a stopped context unpersist
+    * throws (swallowed) — the blocks died with the executors already. */
   private def release(df: DataFrame): Unit =
-    try {
-      df.queryExecution.optimizedPlan.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-    } catch { case _: Throwable => () }
+    try Joins.unpersistLocalCheckpoint(df) catch { case _: Throwable => () }
 
   /** Drop cache entries whose SparkContext has stopped (their blocks died
     * with it). Runs on every build, so the map is bounded by entries of

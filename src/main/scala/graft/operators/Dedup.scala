@@ -72,10 +72,10 @@ object Dedup {
     * pages and get dropped or trimmed.
     *
     * Exact interval-union arithmetic: duplicated-gram start positions
-    * are sorted per doc and folded left-to-right with a (covered,
-    * reach) accumulator — `add = max(0, p+g − max(reach, p))`, all
-    * integer, so the oracle replays it with a window formulation and
-    * the results are equal by arithmetic, not by luck.
+    * go through [[coverageFold]], a running-max window per doc —
+    * `add = max(0, p+g − max(reach, p))`, all integer, so the oracle
+    * replays it with a window formulation and the results are equal by
+    * arithmetic, not by luck.
     *
     * Scale: the gram explode is the cost — corpus rows × positions on
     * the wire into ONE count shuffle on the gram hash (the
@@ -103,19 +103,11 @@ object Dedup {
         col("x.h").as("h"))
     val dup = occ.groupBy(col("h")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2).select(col("h"))
-    val perDoc = occ.join(dup, Seq("h"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_dup_grams"),
-        sort_array(collect_list(col("pos"))).as("ps"))
-      .withColumn("covered", expr(
-        s"""aggregate(ps, struct(0L AS cov, 0L AS reach),
-           |  (a, p) -> struct(
-           |    a.cov + greatest(0L, p + $g - greatest(a.reach, p)),
-           |    greatest(a.reach, p + $g)),
-           |  a -> a.cov)""".stripMargin))
+    val perDoc = coverageFold(occ.join(dup, Seq("h"))
+      .select(col("doc_id"), col("pos")), g, sliced = false)
+      .withColumnRenamed("n_dup_starts", "n_dup_grams")
     toks.select(col("doc_id"), col("n_tokens"))
-      .join(perDoc.select(col("doc_id"), col("n_dup_grams"),
-        col("covered")), Seq("doc_id"), "left")
+      .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"),
         coalesce(col("covered"), lit(0L)).as("covered_tokens"))
@@ -1159,16 +1151,8 @@ object Dedup {
     * incremental path (state `marks` → per-doc coverage row). */
   def exactSubstrCoverageFromMarks(docs: DataFrame, marks: DataFrame,
                                    minLen: Int = 25): DataFrame =
-    coverageOutput(docs, marks.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_dup_starts"),
-        sort_array(collect_list(col("pos"))).as("ps"))
-      .withColumn("covered", expr(
-        s"""aggregate(ps, struct(0L AS cov, 0L AS reach),
-           |  (a, p) -> struct(
-           |    a.cov + greatest(0L, p + $minLen - greatest(a.reach, p)),
-           |    greatest(a.reach, p + $minLen)),
-           |  a -> a.cov)""".stripMargin))
-      .select(col("doc_id"), col("n_dup_starts"), col("covered")))
+    coverageOutput(docs, coverageFold(
+      marks.select(col("doc_id"), col("pos")), minLen, sliced = false))
 
   /** TRIM serve from incremental-state `marks` (r14 VERDICT #4 residual:
     * the state stored marks but only the coverage fold could serve, so
@@ -2161,8 +2145,7 @@ object Dedup {
     * the worst-case duplicated large-star output is still a few MB —
     * one shuffle block — so the saved exchange+agg stage dominates. */
   private[graft] def ccSmallGraphEdges: Long =
-    sys.env.get("SPARK_GRAFT_CC_SMALL_EDGES").map(_.toLong)
-      .getOrElse(131072L)
+    graft.Env.long("SPARK_GRAFT_CC_SMALL_EDGES", 131072L)
 
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 16): DataFrame =
     connectedComponentsImpl(pairs, maxRounds, ccSmallGraphEdges)

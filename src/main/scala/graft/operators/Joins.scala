@@ -578,8 +578,7 @@ object Joins {
     * above every sf0.1/sf1 graph (guide §3.1: a few hundred MB of
     * broadcast is fine; 4M carry rows ≈ 200 MB hashed). */
   private[graft] def graphBroadcastMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_GRAPH_BCAST_MAX").map(_.toLong)
-      .getOrElse(4000000L)
+    graft.Env.long("SPARK_GRAFT_GRAPH_BCAST_MAX", 4000000L)
 
   /** Hash-partition by `k`, sort within partitions and EAGERLY local-
     * checkpoint, preserving (partitioning, ordering) in the checkpoint's

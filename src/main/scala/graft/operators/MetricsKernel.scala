@@ -108,10 +108,6 @@ object MetricsKernel {
         sum(when(isReq, 1L).otherwise(0L)).as("total_requests"))
   }
 
-  /** A14: country-null normalization (`metricsreader.py:1684-1686`). */
-  def normalizeCountry(c: Column, default: String = "US"): Column =
-    coalesce(c, lit(default))
-
   /** Ordered funnel: per user, the timestamp at which each stage of
     * `stages` was first reached, where stage k counts only strictly after
     * stage k−1's timestamp (greedy first-match — standard funnel

@@ -13,6 +13,12 @@ import org.apache.spark.sql.functions._
   * both mechanisms unnecessary: the result is a pure, deterministic function
   * of the event set, independent of arrival order.
   *
+  * The session rule is written once, in [[withGapSeq]] (the window walk)
+  * and [[mergeBuckets]] (the cross-bucket renumbering). Every batch
+  * sessionizer is built from those two: [[withSessionSeq]],
+  * [[withSessionSeqSplit]], and the incrementally maintained
+  * [[graft.reports.SessionGold]], whose day partitions are the buckets.
+  *
   * Scale: one shuffle on the session key (hash partition by `key`), then a
   * per-partition sort — the same cost profile as any windowed aggregation.
   * No driver-side state, no collect. Skewed keys (one IP with millions of
@@ -25,20 +31,33 @@ object Sessionize {
 
   /** Adds `session_seq`: 1-based index of the session within `key`, ordered
     * by `ts` (with `tieBreak` for deterministic ordering of equal
-    * timestamps). A new session starts when the gap from the previous event
-    * exceeds `gapSeconds` (strictly greater — the reference keeps an event
-    * exactly at the TTL in the same session, `metricselasticsearch.py:996-1003`).
+    * timestamps) — [[withGapSeq]] partitioned by the key alone.
     */
   def withSessionSeq(df: DataFrame, key: Column, ts: Column, tieBreak: Column,
-                     gapSeconds: Long): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(ts, tieBreak)
-    val gapMicros = gapSeconds * 1000000L
-    val isNew = when(
-      unix_micros(ts) - unix_micros(lag(ts, 1).over(w)) <= gapMicros, 0L
-    ).otherwise(1L) // lag NULL (first event of key) → 1
-    df.withColumn("session_seq",
+                     gapSeconds: Long): DataFrame =
+    withGapSeq(df, Seq(key), ts, tieBreak, gapSeconds, "session_seq")
+
+  /** The gap walk every batch sessionizer runs: adds `out`, the 1-based
+    * session index within `partition`, ordered by (`ts`, `tieBreak`). A
+    * new session starts when the gap from the previous event exceeds
+    * `gapSeconds` (strictly greater — the reference keeps an event exactly
+    * at the TTL in the same session, `metricselasticsearch.py:996-1003`).
+    */
+  private[graft] def withGapSeq(df: DataFrame, partition: Seq[Column],
+                                ts: Column, tieBreak: Column,
+                                gapSeconds: Long, out: String): DataFrame = {
+    val w = Window.partitionBy(partition: _*).orderBy(ts, tieBreak)
+    val isNew = when(continues(lag(ts, 1).over(w), ts, gapSeconds), 0L)
+      .otherwise(1L) // lag NULL (first event of the partition) → 1
+    df.withColumn(out,
       sum(isNew).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
+
+  /** The session rule: an event at `next` continues the session whose last
+    * event is at `prev` iff the gap is at most the TTL (NULL `prev` → NULL,
+    * i.e. a new session). */
+  private def continues(prev: Column, next: Column, gapSeconds: Long): Column =
+    unix_micros(next) - unix_micros(prev) <= gapSeconds * 1000000L
 
   /** Size-aware default dispatch: sessionize via the bounded
     * [[withSessionSeqSplit]] path when the input's Catalyst size estimate
@@ -87,55 +106,51 @@ object Sessionize {
   /** [[withSessionSeq]] with a BOUNDED per-task key span — the hot-key
     * variant for when one key's full history is too big to sort in a
     * single window partition (the 100 TB escape hatch promised in
-    * SCALE.md).
-    *
-    * Two exact phases:
-    *  1. sessionize per (key, time-bucket of `splitSeconds`) — each task
-    *     sorts at most one bucket of one key;
-    *  2. merge across bucket boundaries on the per-(key, bucket) SUMMARY
-    *     (one row each — tiny): bucket b's first session continues the
-    *     previous bucket's last session iff the boundary gap ≤ TTL, and a
-    *     running offset renumbers local seqs globally.
-    *
-    * Exactness needs `gapSeconds <= splitSeconds`: then an empty bucket
-    * between two occupied ones implies a gap > TTL, so only ADJACENT
-    * occupied buckets can merge — which the lag over occupied buckets
-    * handles. Produces the identical `session_seq` as [[withSessionSeq]]
-    * (property-tested).
+    * SCALE.md). Two exact phases: [[withGapSeq]] per (key, time-bucket of
+    * `splitSeconds`), so each task sorts at most one bucket of one key,
+    * then [[mergeBuckets]] on the tiny per-(key, bucket) summary. Needs
+    * `gapSeconds <= splitSeconds`; produces the identical `session_seq` as
+    * [[withSessionSeq]] (property-tested).
     */
   def withSessionSeqSplit(df: DataFrame, key: Column, ts: Column,
                           tieBreak: Column, gapSeconds: Long,
                           splitSeconds: Long = 86400L): DataFrame = {
     require(gapSeconds <= splitSeconds,
       s"split window ($splitSeconds s) must be >= session gap ($gapSeconds s)")
-    val gapMicros = gapSeconds * 1000000L
-    val splitMicros = splitSeconds * 1000000L
     val bucketed = df.withColumn("_bucket",
-      floor(unix_micros(ts) / splitMicros))
-    val wLocal = Window.partitionBy(key, col("_bucket")).orderBy(ts, tieBreak)
-    val isNew = when(
-      unix_micros(ts) - unix_micros(lag(ts, 1).over(wLocal)) <= gapMicros, 0L
-    ).otherwise(1L)
-    val local = bucketed.withColumn("_local_seq",
-      sum(isNew).over(wLocal.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)))
-    val summary = local.groupBy(key.as("_k"), col("_bucket").as("_b"))
-      .agg(max(col("_local_seq")).as("_n"),
-        min(ts).as("_first"), max(ts).as("_last"))
+      floor(unix_micros(ts) / (splitSeconds * 1000000L)))
+    val local = withGapSeq(bucketed, Seq(key, col("_bucket")), ts, tieBreak,
+      gapSeconds, "_local_seq")
+    mergeBuckets(local, key, col("_bucket"), ts, "_local_seq", gapSeconds)
+      .drop("_bucket")
+  }
+
+  /** Phase 2 of a bucketed sessionization: renumbers the bucket-local
+    * `localSeq` (a [[withGapSeq]] over (`key`, `bucket`)) into the global
+    * `session_seq` per `key`, dropping `localSeq`. Works on the
+    * per-(key, bucket) summary, one row each: bucket b's first session
+    * continues the previous occupied bucket's last session iff the
+    * boundary gap is within the TTL, and a running offset over the
+    * summary renumbers. Exact when no bucket is shorter than the gap
+    * (then an empty bucket between two occupied ones implies a gap > TTL,
+    * so only ADJACENT occupied buckets can merge). */
+  private[graft] def mergeBuckets(local: DataFrame, key: Column,
+                                  bucket: Column, ts: Column,
+                                  localSeq: String,
+                                  gapSeconds: Long): DataFrame = {
     val wKey = Window.partitionBy(col("_k")).orderBy(col("_b"))
-    val offsets = summary
-      .withColumn("_merged", when(
-        unix_micros(col("_first")) -
-          unix_micros(lag(col("_last"), 1).over(wKey)) <= gapMicros, 1L
-      ).otherwise(0L))
+    val offsets = local.groupBy(key.as("_k"), bucket.as("_b"))
+      .agg(max(col(localSeq)).as("_n"),
+        min(ts).as("_first"), max(ts).as("_last"))
+      .withColumn("_merged", when(continues(lag(col("_last"), 1).over(wKey),
+        col("_first"), gapSeconds), 1L).otherwise(0L))
       .withColumn("_offset", coalesce(
         sum(col("_n") - col("_merged"))
           .over(wKey.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    local.join(offsets,
-      key === col("_k") && col("_bucket") === col("_b"))
+      .select(col("_k"), col("_b"), col("_merged"), col("_offset"))
+    local.join(offsets, key === col("_k") && bucket === col("_b"))
       .withColumn("session_seq",
-        col("_local_seq") + col("_offset") - col("_merged"))
-      .drop("_bucket", "_local_seq", "_k", "_b", "_n", "_first", "_last",
-        "_merged", "_offset")
+        col(localSeq) + col("_offset") - col("_merged"))
+      .drop("_k", "_b", "_merged", "_offset", localSeq)
   }
 }

@@ -472,17 +472,7 @@ object EventMetricsQueries {
         // horizon (SPARK_GRAFT_TTL_HORIZON_S=30) instead of debugging a
         // value mismatch that is really scheduler latency.
         val ttl = java.time.Duration.ofSeconds(
-          sys.env.get("SPARK_GRAFT_TTL_HORIZON_S").map { v =>
-            // fail with the knob's name, not a bare NumberFormatException
-            // that kills a 250-query sweep opaquely (r15 review)
-            // Try, not a digit pre-check: 20+ digit values pass the
-            // digit test yet still throw a bare NumberFormatException
-            // from toLong (r15 ADVICE) — the parse itself is the gate
-            scala.util.Try(v.toLong).filter(_ >= 0L).getOrElse(
-              throw new IllegalArgumentException(
-                s"SPARK_GRAFT_TTL_HORIZON_S must be a whole number of " +
-                  s"seconds in Long range, got '$v'"))
-          }.getOrElse(10L))
+          graft.Env.long("SPARK_GRAFT_TTL_HORIZON_S", 10L))
         Scratch.buildOnce(base) {
           dumpJsonl(ev.orderBy(col("ts"), col("event_id")).coalesce(1),
             s"$base/stage1", s"$base/src", "ev_", fmt)

@@ -1,7 +1,7 @@
 package graft.reports
 
+import graft.operators.Sessionize
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained sessionization state — the Spark answer to the
@@ -11,23 +11,21 @@ import org.apache.spark.sql.functions._
   * protocol, but a naive recompute re-sorts all history every run; this
   * job bounds each run to the days whose events actually changed.
   *
-  * Two-phase split (same math as `Sessionize.withSessionSeqSplit`,
-  * exactness requires gap ≤ 1 day):
+  * Two-phase split that uses `Sessionize.withSessionSeqSplit`'s two
+  * phases with the day as the bucket (exactness requires gap ≤ 1 day), so
+  * the maintained view and the full recompute run the same code:
   *
-  *  1. LOCAL: sessions per (user, day), materialized as a parquet table
-  *     partitioned by day. A per-day event fingerprint decides which day
-  *     partitions to rebuild — a daily incremental run touches the new
-  *     day (and any late-data days), never the history.
-  *  2. GLOBAL: session renumbering derives from the per-(user, day)
-  *     summary — one row per user-day, O(users × days), tiny — and is
-  *     recomputed in full each run (offsets downstream of a changed day
-  *     shift anyway). [[read]] joins local × offsets lazily, so the
-  *     expensive per-event state is never rewritten for a renumber.
+  *  1. LOCAL: `Sessionize.withGapSeq` per (user, day), materialized as a
+  *     parquet table partitioned by day. A per-day event fingerprint
+  *     decides which day partitions to rebuild — a daily incremental run
+  *     touches the new day (and any late-data days), never the history.
+  *  2. GLOBAL: `Sessionize.mergeBuckets` renumbers from the per-(user, day)
+  *     summary — one row per user-day, O(users × days), tiny — recomputed
+  *     in full each run (offsets downstream of a changed day shift
+  *     anyway). [[read]] applies it lazily, so the expensive per-event
+  *     state is never rewritten for a renumber.
   */
 object SessionGold {
-
-  private def withDay(events: DataFrame): DataFrame =
-    events.withColumn("event_day", to_date(col("ts")))
 
   /** Rebuild changed day-partitions of the local-session table, delete
     * vanished days, refresh the (tiny) state — all via the shared
@@ -36,47 +34,20 @@ object SessionGold {
   def build(spark: SparkSession, events: DataFrame, gapSeconds: Long,
             localPath: String, statePath: String): (Long, Long, Long) = {
     require(gapSeconds <= 86400L, "split-by-day needs gap <= 1 day")
-    val byDay = withDay(events)
-    val gapMicros = gapSeconds * 1000000L
-    val wLocal = Window.partitionBy(col("user_id"), col("event_day"))
-      .orderBy(col("ts"), col("event_id"))
-    val isNew = when(unix_micros(col("ts")) -
-      unix_micros(lag(col("ts"), 1).over(wLocal)) <= gapMicros, 0L)
-      .otherwise(1L)
-    val local = byDay.withColumn("local_seq",
-      sum(isNew).over(wLocal.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)))
+    val byDay = events.withColumn("event_day", to_date(col("ts")))
+    val local = Sessionize.withGapSeq(byDay,
+      Seq(col("user_id"), col("event_day")), col("ts"), col("event_id"),
+      gapSeconds, "local_seq")
     GoldTables.incrementalOverwrite(spark, byDay, "event_day",
       localPath, s"$statePath/days",
       changed => local.join(changed, Seq("event_day"), "left_semi"))
   }
 
   /** Globally-numbered sessions from the materialized local table: the
-    * per-(user, day) summary + running offsets renumber local seqs — the
     * join against per-event rows is the only data-sized work, and it reads
     * the cached partitions untouched. */
   def read(spark: SparkSession, localPath: String,
-           gapSeconds: Long): DataFrame = {
-    val gapMicros = gapSeconds * 1000000L
-    val local = spark.read.parquet(localPath)
-    val summary = local.groupBy(col("user_id").as("_u"),
-      col("event_day").as("_d"))
-      .agg(max(col("local_seq")).as("_n"),
-        min(col("ts")).as("_first"), max(col("ts")).as("_last"))
-    val wKey = Window.partitionBy(col("_u")).orderBy(col("_d"))
-    val offsets = summary
-      .withColumn("_merged", when(
-        unix_micros(col("_first")) -
-          unix_micros(lag(col("_last"), 1).over(wKey)) <= gapMicros, 1L
-      ).otherwise(0L))
-      .withColumn("_offset", coalesce(
-        sum(col("_n") - col("_merged"))
-          .over(wKey.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_u"), col("_d"), col("_merged"), col("_offset"))
-    local.join(offsets,
-      col("user_id") === col("_u") && col("event_day") === col("_d"))
-      .withColumn("session_seq",
-        col("local_seq") + col("_offset") - col("_merged"))
-      .drop("_u", "_d", "_merged", "_offset", "local_seq")
-  }
+           gapSeconds: Long): DataFrame =
+    Sessionize.mergeBuckets(spark.read.parquet(localPath), col("user_id"),
+      col("event_day"), col("ts"), "local_seq", gapSeconds)
 }

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** One input event for the stateful sessionizer. */
 case class SessionEvent(user_id: Long, ts: Timestamp, event_id: Long)
@@ -17,18 +17,23 @@ case class SessionState(lastTsMicros: Long, sessionSeq: Long)
 case class SessionizedEvent(user_id: Long, ts: Timestamp, event_id: Long,
                             session_seq: Long)
 
-/** Streaming sessionization (SURVEY.md §2.5/§2.9) — two Spark-native
+/** Streaming sessionization (SURVEY.md §2.5/§2.9) — Spark-native
   * replacements for the reference's batch repair loop
   * (`metricselasticsearch.py:1015-1072`):
   *
   *  1. [[sessionWindowStats]] — built-in `session_window` with watermark:
   *     late events within the watermark merge into their session natively,
   *     replacing the reference's `removeStaleSessionIds` repair
-  *     (`:887-931`). Preferred: state store managed by Spark, AQE-friendly.
-  *  2. [[statefulSessionize]] — `flatMapGroupsWithState` carrying
-  *     {lastTs, sessionSeq}: exact parity with the reference's incremental
-  *     id assignment, for when per-event session tags must be emitted
-  *     in-flight rather than per closed session.
+  *     (`:887-931`). State store managed by Spark, AQE-friendly; a
+  *     different (strict) boundary rule, see its doc.
+  *  2. Per-event session tags carrying {lastTs, sessionSeq}: exact parity
+  *     with the reference's incremental id assignment, for when tags must
+  *     be emitted in-flight rather than per closed session. The session
+  *     rule is ONE pure walk ([[walk]]) served by two state APIs:
+  *     [[statefulSessionize]] (`flatMapGroupsWithState` — watermark
+  *     eviction, default state store) and [[SessionizeProcessor]]
+  *     (`transformWithState` — named slots, optional replay suppression,
+  *     RocksDB store), so the two cannot drift.
   *
   * Scale: state is partitioned by user key across executors. For
   * [[sessionWindowStats]] the watermark bounds state size natively. For
@@ -61,149 +66,94 @@ object StreamingSessionize {
         col("session_start"), col("session_end"))
   }
 
-  /** Run [[sessionWindowStats]] as a checkpointed streaming job: JSONL
-    * directory → session aggregates → parquet, append mode (the file sink's
-    * only mode — correct here, since a session row is appended exactly once
-    * when the watermark finalizes its window). Sessions still extendable at
-    * end-of-input (within watermark + gap of the max event time) stay in
-    * state, unemitted, until a later run's data advances the watermark —
-    * the caller controls finalization by what it feeds (e.g. a sentinel row
-    * past the horizon). */
-  def streamSessionsToParquet(spark: org.apache.spark.sql.SparkSession,
-                              srcDir: String, schemaSource: DataFrame,
-                              outPath: String, checkpoint: String,
-                              gapSeconds: Long, watermarkDelay: String,
-                              readOptions: Map[String, String] = Map.empty): Unit = {
-    val stream = spark.readStream
-      .schema(schemaSource.schema)
-      .option("mode", "DROPMALFORMED")
-      .options(readOptions)
-      .json(srcDir)
-    val q = sessionWindowStats(stream, gapSeconds, Some(watermarkDelay))
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Run [[statefulSessionize]] as a checkpointed streaming job: JSONL
-    * directory → per-event session tags → parquet. flatMapGroupsWithState
-    * emits rows in the batch that processes them (no watermark hold-back),
-    * so with an AvailableNow feed the sink carries a tag for every input
-    * event. No watermark/timeout is armed — correct for a bounded graded
-    * feed; an unbounded deployment passes a watermark through
-    * [[statefulSessionize]] instead. */
-  def streamStatefulToParquet(spark: org.apache.spark.sql.SparkSession,
-                              srcDir: String, schemaSource: DataFrame,
-                              outPath: String, checkpoint: String,
-                              gapSeconds: Long,
-                              readOptions: Map[String, String] = Map.empty): Unit = {
-    import spark.implicits._
-    val stream = spark.readStream
-      .schema(schemaSource.schema)
-      .option("mode", "DROPMALFORMED")
-      .options(readOptions)
-      .json(srcDir)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .as[SessionEvent]
-    val q = statefulSessionize(stream, gapSeconds)
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** [[statefulSessionize]] on Spark 4's `transformWithState` — the
-    * successor stateful API (SPARK-46815): explicit named state slots
-    * through a `StatefulProcessor`, RocksDB-backed, with TTL and timers
-    * as first-class handles instead of the single implicit state cell
-    * `flatMapGroupsWithState` carries. Bit-identical session semantics
-    * to [[statefulSessionize]] (same per-batch sort, same `<= gap`
-    * boundary, same seq walk) — the graded parity query proves the two
-    * engines' state paths agree row-exactly. Production reach: the
-    * processor shape extends to multi-slot state (e.g. a session cell
-    * PLUS a per-user dedup ListState) without re-encoding everything
-    * into one case class, which is where the old API runs out. */
-  class SessionizeProcessor(gapSeconds: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, SessionEvent, SessionizedEvent] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      st = getHandle.getValueState[SessionState]("session",
-        org.apache.spark.sql.Encoders.product[SessionState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      ()
-    }
-
-    override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[SessionizedEvent] = {
-      def micros(t: Timestamp): Long =
-        t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-      val gapMicros = gapSeconds * 1000000L
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var s = if (st.exists()) st.get()
-              else SessionState(Long.MinValue, 0L)
-      val out = sorted.map { e =>
+  /** One micro-batch of one key through the session rule: sorts the
+    * batch by (ts µs, `event_id`) — the reference sorts new events by
+    * dateLogged (`:820-826`); cross-batch ordering relies on the upstream
+    * source's per-key ordering, as its mark/live-session carry-over does —
+    * keeps the events `admit` accepts, in that order, and tags each one,
+    * starting a new session when the gap from the previous event exceeds
+    * `gapSeconds` (`<=` continues, the reference's TTL check). Returns the
+    * state to carry and the tagged events. */
+  private[streaming] def walk(user: Long, state: Option[SessionState],
+                              rows: Iterator[SessionEvent], gapSeconds: Long,
+                              admit: SessionEvent => Boolean = _ => true)
+      : (SessionState, Seq[SessionizedEvent]) = {
+    def micros(t: Timestamp): Long =
+      t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+    val gapMicros = gapSeconds * 1000000L
+    var s = state.getOrElse(SessionState(Long.MinValue, 0L))
+    val out = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+      .filter(admit).map { e =>
         val ts = micros(e.ts)
-        val newSession = s.sessionSeq == 0L ||
-          ts - s.lastTsMicros > gapMicros
-        s = SessionState(ts, if (newSession) s.sessionSeq + 1
-                             else s.sessionSeq)
+        val newSession = s.sessionSeq == 0L || ts - s.lastTsMicros > gapMicros
+        s = SessionState(ts, if (newSession) s.sessionSeq + 1 else s.sessionSeq)
         SessionizedEvent(user, e.ts, e.event_id, s.sessionSeq)
       }
-      st.update(s)
-      out.iterator
-    }
+    (s, out)
   }
 
-  /** Per-event session tagging through [[SessionizeProcessor]]. NOTE:
-    * `transformWithState` requires the RocksDB state store provider —
-    * callers set `spark.sql.streaming.stateStore.providerClass` to
-    * `...state.RocksDBStateStoreProvider` for the query's lifetime
-    * ([[streamStatefulTwsToParquet]] does this, restoring the previous
-    * provider afterwards). */
-  def statefulSessionizeTws(events: Dataset[SessionEvent],
-                            gapSeconds: Long): Dataset[SessionizedEvent] = {
+  /** Incremental per-event session tagging through `flatMapGroupsWithState`
+    * — the streaming twin of `Sessionize.withSessionSeq`, one [[walk]] per
+    * key and micro-batch. */
+  def statefulSessionize(events: Dataset[SessionEvent],
+                         gapSeconds: Long,
+                         watermark: Option[String] = None): Dataset[SessionizedEvent] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new SessionizeProcessor(gapSeconds),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
+    val src = watermark.fold(events)(w => events.withWatermark("ts", w))
+    val timeoutConf =
+      if (watermark.isDefined) GroupStateTimeout.EventTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+    src.groupByKey(_.user_id)
+      .flatMapGroupsWithState[SessionState, SessionizedEvent](
+        OutputMode.Append(), timeoutConf) {
+        (user: Long, it: Iterator[SessionEvent], state: GroupState[SessionState]) =>
+          if (state.hasTimedOut) {
+            // watermark passed lastTs + gap: the session can no longer be
+            // extended by an on-time event — evict (state stays O(active keys))
+            state.remove()
+            Iterator.empty
+          } else {
+            val (st, out) = walk(user, state.getOption, it, gapSeconds)
+            state.update(st)
+            if (watermark.isDefined)
+              // must exceed the current watermark or Spark rejects the timer
+              state.setTimeoutTimestamp(math.max(
+                st.lastTsMicros / 1000L + gapSeconds * 1000L,
+                state.getCurrentWatermarkMs() + 1L))
+            out.iterator
+          }
+      }
   }
 
-  /** TWO named state slots in ONE processor — the case the successor
-    * API exists for (and the one `flatMapGroupsWithState`'s single
-    * state cell cannot express without packing everything into one
-    * case class): a per-user replay-suppression MapState (event_id →
-    * seen, the reference's `eventExists` ingest guard) feeding the
-    * session-walk ValueState. A redelivered event is dropped BEFORE it
-    * can touch the session state, so a late replay can neither advance
-    * `lastTs` nor double-tag — the full ingest shape (dedup →
-    * sessionize) as one stateful operator with no intermediate table.
-    * State budget: the dedup map is O(events per user) on a bounded
-    * graded feed; production arms `seenTtl` with the upstream replay
-    * horizon — the slot-level TTL knob bounds the map at O(events per
-    * user per horizon) while the session ValueState (which MUST
-    * survive arbitrarily long idle gaps) stays un-TTL'd. A TTL'd slot
-    * requires `TimeMode.ProcessingTime`; expiry is measured from each
-    * entry's last write, so a replay arriving INSIDE the horizon is
-    * suppressed and one arriving AFTER it is re-admitted (and walks
-    * the session state with its original timestamp — graded
-    * end-to-end in `w_stream_tws_ttl_readmit`). */
-  class DedupSessionizeProcessor(gapSeconds: Long,
-                                 seenTtl: Option[java.time.Duration] = None)
+  /** [[statefulSessionize]]'s walk on Spark 4's `transformWithState` — the
+    * successor stateful API (SPARK-46815): explicit named state slots
+    * through a `StatefulProcessor`, RocksDB-backed, with TTL and timers as
+    * first-class handles instead of the single implicit state cell
+    * `flatMapGroupsWithState` carries. The `session` ValueState holds the
+    * [[walk]]'s state.
+    *
+    * With `dedup` set, a second slot — a per-user replay-suppression
+    * MapState (event_id → seen, the reference's `eventExists` ingest
+    * guard) — is registered and feeds the walk's `admit`: a redelivered
+    * event is dropped BEFORE it can touch the session state, so a late
+    * replay can neither advance `lastTs` nor double-tag — the full ingest
+    * shape (dedup → sessionize) as one stateful operator with no
+    * intermediate table. Without `dedup` the processor registers the
+    * session slot only, and tags a replay exactly as
+    * [[statefulSessionize]] does.
+    *
+    * State budget: the dedup map is O(events per user) on a bounded graded
+    * feed; production arms `seenTtl` with the upstream replay horizon —
+    * the slot-level TTL bounds the map at O(events per user per horizon)
+    * while the session ValueState (which MUST survive arbitrarily long
+    * idle gaps) stays un-TTL'd. A TTL'd slot requires
+    * `TimeMode.ProcessingTime`; expiry is measured from each entry's last
+    * write, so a replay arriving INSIDE the horizon is suppressed and one
+    * arriving AFTER it is re-admitted (and walks the session state with
+    * its original timestamp — graded end-to-end in
+    * `w_stream_tws_ttl_readmit`). */
+  class SessionizeProcessor(gapSeconds: Long, dedup: Boolean = false,
+                            seenTtl: Option[java.time.Duration] = None)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, SessionEvent, SessionizedEvent] {
     @transient private var seen:
@@ -213,11 +163,12 @@ object StreamingSessionize {
 
     override def init(outputMode: OutputMode,
         timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      seen = getHandle.getMapState[Long, Boolean]("seen",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        seenTtl.fold(org.apache.spark.sql.streaming.TTLConfig.NONE)(
-          org.apache.spark.sql.streaming.TTLConfig.apply))
+      if (dedup)
+        seen = getHandle.getMapState[Long, Boolean]("seen",
+          org.apache.spark.sql.Encoders.scalaLong,
+          org.apache.spark.sql.Encoders.scalaBoolean,
+          seenTtl.fold(org.apache.spark.sql.streaming.TTLConfig.NONE)(
+            org.apache.spark.sql.streaming.TTLConfig.apply))
       st = getHandle.getValueState[SessionState]("session",
         org.apache.spark.sql.Encoders.product[SessionState],
         org.apache.spark.sql.streaming.TTLConfig.NONE)
@@ -227,37 +178,89 @@ object StreamingSessionize {
     override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
         timerValues: org.apache.spark.sql.streaming.TimerValues):
         Iterator[SessionizedEvent] = {
-      def micros(t: Timestamp): Long =
-        t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-      val gapMicros = gapSeconds * 1000000L
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var s = if (st.exists()) st.get()
-              else SessionState(Long.MinValue, 0L)
-      val out = sorted.flatMap { e =>
-        if (seen.containsKey(e.event_id)) None // replay: suppressed
-        else {
-          seen.updateValue(e.event_id, true)
-          val ts = micros(e.ts)
-          val newSession = s.sessionSeq == 0L ||
-            ts - s.lastTsMicros > gapMicros
-          s = SessionState(ts, if (newSession) s.sessionSeq + 1
-                               else s.sessionSeq)
-          Some(SessionizedEvent(user, e.ts, e.event_id, s.sessionSeq))
+      val admit: SessionEvent => Boolean =
+        if (!dedup) _ => true
+        else e => !seen.containsKey(e.event_id) && {
+          seen.updateValue(e.event_id, true); true
         }
-      }
+      val (s, out) = walk(user, if (st.exists()) Some(st.get()) else None,
+        rows, gapSeconds, admit)
       st.update(s)
       out.iterator
     }
   }
 
+  /** The JSONL feed every `stream*ToParquet` job reads: `srcDir` with
+    * `schemaSource`'s schema, malformed lines dropped. */
+  private def jsonFeed(spark: SparkSession, srcDir: String,
+                       schemaSource: DataFrame,
+                       readOptions: Map[String, String]): DataFrame =
+    spark.readStream
+      .schema(schemaSource.schema)
+      .option("mode", "DROPMALFORMED")
+      .options(readOptions)
+      .json(srcDir)
+
+  /** The per-event columns of a [[jsonFeed]], typed for the stateful walk. */
+  private def sessionEvents(feed: DataFrame): Dataset[SessionEvent] = {
+    import feed.sparkSession.implicits._
+    feed.select(col("user_id"), col("ts"), col("event_id")).as[SessionEvent]
+  }
+
+  /** The sink every `stream*ToParquet` job writes: append to parquet at
+    * `outPath`, checkpointed, one AvailableNow run to completion. */
+  private def appendAvailableNow(out: Dataset[_], outPath: String,
+                                 checkpoint: String): Unit =
+    out.writeStream
+      .format("parquet")
+      .option("path", outPath)
+      .option("checkpointLocation", checkpoint)
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** Run [[sessionWindowStats]] as a checkpointed streaming job: JSONL
+    * directory → session aggregates → parquet, append mode (the file sink's
+    * only mode — correct here, since a session row is appended exactly once
+    * when the watermark finalizes its window). Sessions still extendable at
+    * end-of-input (within watermark + gap of the max event time) stay in
+    * state, unemitted, until a later run's data advances the watermark —
+    * the caller controls finalization by what it feeds (e.g. a sentinel row
+    * past the horizon). */
+  def streamSessionsToParquet(spark: SparkSession,
+                              srcDir: String, schemaSource: DataFrame,
+                              outPath: String, checkpoint: String,
+                              gapSeconds: Long, watermarkDelay: String,
+                              readOptions: Map[String, String] = Map.empty): Unit =
+    appendAvailableNow(sessionWindowStats(
+      jsonFeed(spark, srcDir, schemaSource, readOptions), gapSeconds,
+      Some(watermarkDelay)), outPath, checkpoint)
+
+  /** Run [[statefulSessionize]] as a checkpointed streaming job: JSONL
+    * directory → per-event session tags → parquet. flatMapGroupsWithState
+    * emits rows in the batch that processes them (no watermark hold-back),
+    * so with an AvailableNow feed the sink carries a tag for every input
+    * event. No watermark/timeout is armed — correct for a bounded graded
+    * feed; an unbounded deployment passes a watermark through
+    * [[statefulSessionize]] instead. */
+  def streamStatefulToParquet(spark: SparkSession,
+                              srcDir: String, schemaSource: DataFrame,
+                              outPath: String, checkpoint: String,
+                              gapSeconds: Long,
+                              readOptions: Map[String, String] = Map.empty): Unit =
+    appendAvailableNow(statefulSessionize(sessionEvents(
+      jsonFeed(spark, srcDir, schemaSource, readOptions)), gapSeconds),
+      outPath, checkpoint)
+
   /** [[streamStatefulToParquet]]'s twin over the transformWithState
-    * path: JSONL feed → RocksDB-backed per-event session tags →
-    * parquet. Sets the RocksDB provider for the run and restores the
-    * prior setting (other graded streams keep the default HDFS-backed
-    * store). Pass `dedup = true` for the two-slot
-    * [[DedupSessionizeProcessor]] (replay suppression fused in front
-    * of the session walk). */
-  def streamStatefulTwsToParquet(spark: org.apache.spark.sql.SparkSession,
+    * path: JSONL feed (one file per micro-batch) → RocksDB-backed per-event
+    * session tags through [[SessionizeProcessor]] → parquet. Sets the
+    * RocksDB provider for the run (`transformWithState` requires it) and
+    * restores the prior setting (other graded streams keep the default
+    * HDFS-backed store). `dedup` and `dedupTtl` are the processor's
+    * `dedup` and `seenTtl`. */
+  def streamStatefulTwsToParquet(spark: SparkSession,
                                  srcDir: String, schemaSource: DataFrame,
                                  outPath: String, checkpoint: String,
                                  gapSeconds: Long,
@@ -277,9 +280,6 @@ object StreamingSessionize {
       s"streamStatefulTwsToParquet overrides $key session-wide; " +
         s"refusing with ${spark.streams.active.length} other active " +
         "streaming quer(ies) that would inherit the RocksDB provider")
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // A TTL'd slot forces TimeMode.ProcessingTime, and under the default
     // noDataMicroBatches=true a processing-time stateful query keeps
     // scheduling empty batches to advance eviction — AvailableNow then
@@ -287,95 +287,26 @@ object StreamingSessionize {
     // the kill). TTL correctness doesn't need idle batches: expiry is
     // enforced at READ (an expired entry is invisible to containsKey)
     // and physically cleaned during ordinary batch commits.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.getOption(noDataKey)
-    if (dedupTtl.isDefined) spark.conf.set(noDataKey, "false")
+    val confs = Seq(key ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") ++
+      dedupTtl.map(_ => "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    // a TTL'd slot requires the processing-time TimeMode (expiry is
+    // measured against the batch's processing timestamp); the un-TTL'd
+    // settings keep TimeMode.None so their state format stays unchanged
+    val timeMode =
+      if (dedupTtl.isDefined)
+        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
+      else org.apache.spark.sql.streaming.TimeMode.None()
     try {
-      val stream = spark.readStream
-        .schema(schemaSource.schema)
-        .option("mode", "DROPMALFORMED")
-        .option("maxFilesPerTrigger", "1")
-        .options(readOptions)
-        .json(srcDir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .as[SessionEvent]
-      val processor =
-        if (dedup) new DedupSessionizeProcessor(gapSeconds, dedupTtl)
-        else new SessionizeProcessor(gapSeconds)
-      // a TTL'd slot requires the processing-time TimeMode (expiry is
-      // measured against the batch's processing timestamp); the un-TTL'd
-      // twins keep TimeMode.None so their state format stays unchanged
-      val timeMode =
-        if (dedupTtl.isDefined)
-          org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-        else org.apache.spark.sql.streaming.TimeMode.None()
-      stream.groupByKey(_.user_id)
-        .transformWithState(processor, timeMode, OutputMode.Append())
-        .writeStream
-        .format("parquet")
-        .option("path", outPath)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None    => spark.conf.unset(key)
-      }
-      if (dedupTtl.isDefined) prevNoData match {
-        case Some(p) => spark.conf.set(noDataKey, p)
-        case None    => spark.conf.unset(noDataKey)
-      }
+      val feed = jsonFeed(spark, srcDir, schemaSource,
+        Map("maxFilesPerTrigger" -> "1") ++ readOptions)
+      appendAvailableNow(sessionEvents(feed).groupByKey(_.user_id)
+        .transformWithState(new SessionizeProcessor(gapSeconds, dedup, dedupTtl),
+          timeMode, OutputMode.Append()), outPath, checkpoint)
+    } finally prev.foreach { case (k, p) =>
+      p.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
-  }
-
-  /** Incremental per-event session tagging with explicit state — the
-    * streaming twin of `Sessionize.withSessionSeq`. Events inside one batch
-    * are sorted per key before state application (the reference sorts new
-    * events by dateLogged, `:820-826`); cross-batch ordering relies on the
-    * upstream source's per-key ordering, as the reference's mark/live-session
-    * carry-over does. */
-  def statefulSessionize(events: Dataset[SessionEvent],
-                         gapSeconds: Long,
-                         watermark: Option[String] = None): Dataset[SessionizedEvent] = {
-    import events.sparkSession.implicits._
-    val gapMicros = gapSeconds * 1000000L
-    val src = watermark.fold(events)(w => events.withWatermark("ts", w))
-    val timeoutConf =
-      if (watermark.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    src.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionizedEvent](
-        OutputMode.Append(), timeoutConf) {
-        (user: Long, it: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed lastTs + gap: the session can no longer be
-            // extended by an on-time event — evict (state stays O(active keys))
-            state.remove()
-            Iterator.empty
-          } else {
-            def micros(t: Timestamp): Long =
-              t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-            val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-            var st = state.getOption.getOrElse(SessionState(Long.MinValue, 0L))
-            val out = sorted.map { e =>
-              val tsMicros = micros(e.ts)
-              val newSession = st.sessionSeq == 0L ||
-                tsMicros - st.lastTsMicros > gapMicros
-              st = SessionState(tsMicros,
-                if (newSession) st.sessionSeq + 1 else st.sessionSeq)
-              SessionizedEvent(user, e.ts, e.event_id, st.sessionSeq)
-            }
-            state.update(st)
-            if (watermark.isDefined)
-              // must exceed the current watermark or Spark rejects the timer
-              state.setTimeoutTimestamp(math.max(
-                st.lastTsMicros / 1000L + gapSeconds * 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            out.iterator
-          }
-      }
   }
 }

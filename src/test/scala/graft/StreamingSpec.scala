@@ -579,6 +579,45 @@ class StreamingSpec extends SparkSpec {
     assert(tws((1L, 3L)) == tws((1L, 1L)) + 1L)
   }
 
+  test("SessionizeProcessor dedup flag: off tags a replay as flatMapGroupsWithState does, on suppresses it") {
+    import graft.streaming.StreamingSessionize
+    import spark.implicits._
+    // e3 opens session 2, then a later batch replays e2: the session walk
+    // without dedup tags the replay against the carried state (seq 2, its
+    // old ts is within the gap of lastTs); with dedup it emits nothing
+    val base = 1700000000000L
+    val evs = Map(1L -> (1L, base, 1L), 2L -> (1L, base + 1000L, 2L),
+      3L -> (1L, base + 3600000L + 2000L, 3L), 4L -> (2L, base + 500L, 4L))
+    val dir = java.nio.file.Files.createTempDirectory("twsflag").toString
+    val src = s"$dir/src"; new java.io.File(src).mkdirs()
+    def put(name: String, rows: Seq[(Long, Long, Long)], mtime: Long): Unit = {
+      val f = new java.io.File(src, name)
+      java.nio.file.Files.writeString(f.toPath, rows.map { case (u, t, id) =>
+        s"""{"user_id":$u,"ts":"${new java.sql.Timestamp(t)}","event_id":$id}"""
+      }.mkString("", "\n", "\n"))
+      f.setLastModified(mtime); ()
+    }
+    put("a.json", Seq(evs(1L), evs(2L), evs(3L), evs(4L)), 1700000000000L)
+    put("b.json", Seq(evs(2L)), 1700000002000L) // replay in a later batch
+    val schemaDf = Seq((1L, new java.sql.Timestamp(base), 1L))
+      .toDF("user_id", "ts", "event_id")
+    def rows(p: String) = spark.read.parquet(p)
+      .select("user_id", "event_id", "session_seq").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    StreamingSessionize.streamStatefulTwsToParquet(spark, src, schemaDf,
+      s"$dir/off", s"$dir/off_cp", gapSeconds = 3600)
+    StreamingSessionize.streamStatefulTwsToParquet(spark, src, schemaDf,
+      s"$dir/on", s"$dir/on_cp", gapSeconds = 3600, dedup = true)
+    // the same one-file-per-batch split the transformWithState runs read
+    StreamingSessionize.streamStatefulToParquet(spark, src, schemaDf,
+      s"$dir/fm", s"$dir/fm_cp", gapSeconds = 3600,
+      readOptions = Map("maxFilesPerTrigger" -> "1"))
+    val first = Seq((1L, 1L, 1L), (1L, 2L, 1L), (1L, 3L, 2L), (2L, 4L, 1L))
+    assert(rows(s"$dir/off") == rows(s"$dir/fm"))
+    assert(rows(s"$dir/off") == (first :+ ((1L, 2L, 2L))).sorted)
+    assert(rows(s"$dir/on") == first)
+  }
+
   test("TTL'd seen-slot: inside-horizon replay suppressed, past-horizon replay re-admitted against SURVIVING session state") {
     import graft.streaming.StreamingSessionize
     import spark.implicits._

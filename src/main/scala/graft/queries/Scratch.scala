@@ -10,6 +10,7 @@ package graft.queries
   * failed or in-flight build must never be served as built.
   */
 private[graft] object Scratch {
+  import scala.jdk.CollectionConverters._
 
   private lazy val RunToken: String =
     java.util.UUID.randomUUID().toString.take(8)
@@ -59,8 +60,18 @@ private[graft] object Scratch {
     val p = sys.props("java.io.tmpdir") +
       s"/graft_${kind}_${fingerprint(sfDir)}_$RunToken"
     dirs.add(p)
+    kinds.put(p, kind)
     p
   }
+
+  private val kinds = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val seconds =
+    new java.util.concurrent.ConcurrentHashMap[String, Vector[Double]]()
+
+  /** Wall seconds of each completed [[buildOnce]] build, by the kind its
+    * key was made with in [[dir]] (else the key itself): one-shot builds
+    * run outside any query's timed runs. */
+  def buildSeconds: Map[String, Vector[Double]] = seconds.asScala.toMap
 
   private val built =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -123,7 +134,10 @@ private[graft] object Scratch {
     lock.synchronized {
       if (!built.contains(key)) {
         rm(new java.io.File(key))
+        val t0 = System.nanoTime()
         build
+        seconds.merge(kinds.getOrDefault(key, key),
+          Vector((System.nanoTime() - t0) / 1e9), _ ++ _)
         built.add(key)
       }
     }

@@ -1,9 +1,10 @@
 #!/bin/bash
-# Run graft.Bench (or another main) in a direct JVM — no sbt lock, same
+# Run graft.Sweep (or another main) in a direct JVM — no sbt lock, same
 # flags as build.sbt javaOptions. Usage:
-#   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... tools/bench_direct.sh [main [args...]]
+#   SPARK_GRAFT_CPUS=... tools/bench_direct.sh [main [args...]]
+#   e.g. tools/bench_direct.sh graft.Sweep <sfDir> sweep.jsonl
 set -u
-MAIN="${1:-graft.Bench}"
+MAIN="${1:-graft.Sweep}"
 shift || true
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*"

@@ -14,7 +14,7 @@ SF1=${2:-/tmp/graft_sf1}
 cd "$(dirname "$0")/.."
 # r16 (VERDICT r15 #2): BENCH_sf1_r15 predated the round's final commit —
 # the trend evidence was one commit stale. Refuse a dirty tree so every
-# sf1 artifact provably measures a committed state (Bench stamps the
+# sf1 artifact provably measures a committed state (Sweep stamps the
 # HEAD hash inside the artifact as the cross-check). Override for dev
 # iteration only with SPARK_GRAFT_ALLOW_DIRTY=1.
 if [ -z "$SPARK_GRAFT_ALLOW_DIRTY" ] && [ -n "$(git status --porcelain)" ]; then
@@ -52,11 +52,6 @@ SPARK_GRAFT_SF1_DIR="$SF1" sbt -batch "testOnly graft.ScaleSpec"
 # char/byte-grain build; the sf1 trend already carries that build via
 # d_exact_substr_bytes).
 HEAVY="q5_star_join,j3_closure_pairs,v_ivfpq_topk,d_minhash_lsh,q3_shipping_priority,j1_equi_normalized,a4_session_rollup,d_chunk_dedup,d_cdc_chunk_dedup,t_top_ngrams,q1_pricing_summary,j_pagerank,j_scd2_dimension,j_merge_apply,q8_market_share,d_byte_cdc_dedup,d_byte_cdc_gear,j_pagerank_incremental,a_exact_quantiles,d_incremental_components,a_kmv_cohort_overlap,j_triangle_count,a_topk_sliding,a_hist_sliding_quantiles,j_ra_linkpred,j_label_propagation,j_pagerank_personalized,p_pipeline_e2e,t_winnow_fingerprints,t_winnow_prod_hash,d_winnow_pairs,d_dup_span_fraction,d_dup_span_trim,w_stream_sessions_tws,w_stream_cdc_gold,d_exact_substr,d_exact_substr_trim,d_exact_substr_keepfirst,d_exact_substr_l200,d_exact_substr_bytes,d_exact_substr_incremental,d_exact_substr_quarantine,d_exact_substr_segmented,d_exact_substr_incr_trim,d_winnow_incremental,j_ra_linkpred_sampled,d_exact_substr_keepfirst_segmented,w_stream_exactsubstr_gold"
-# temp + mv: the bench fences against the newest parseable sf1 trend
-# artifact (r15) — truncating the target file in place would erase the
-# baseline mid-run (and lose the old artifact if the sweep dies)
-SPARK_GRAFT_SF_DIR="$SF1" SPARK_GRAFT_BENCH_ONLY="$HEAVY" SPARK_GRAFT_CPUS=32 \
-  sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"' \
-  > "BENCH_sf1_r${ROUND}.json.tmp"
-mv "BENCH_sf1_r${ROUND}.json.tmp" "BENCH_sf1_r${ROUND}.json"
+SPARK_GRAFT_ONLY="$HEAVY" SPARK_GRAFT_CPUS=32 \
+  sbt -batch "runMain graft.Sweep $SF1 BENCH_sf1_r${ROUND}.json"
 cat "BENCH_sf1_r${ROUND}.json"

@@ -1699,12 +1699,17 @@ object Dedup {
       .localCheckpoint()
     val members = perDoc.select(col("fp"), col("doc_id"))
     // one representative per fingerprint (min doc_id); materialized once,
-    // consumed by the band explode and by both sides of the verify join
+    // consumed by the band explode and by both sides of the verify join.
+    // Lazy: every consumer reads the pair pipeline in full (the components
+    // count, a written or collected pair list), so the blocks complete
+    // inside that job — eager paid one more job per call (15 → 14 jobs
+    // per nearDupComponents on the perfbench corpus), and no checkpoint at
+    // all shuffles perDoc once per consumer
     val reps = perDoc
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
       .filter(col("rn") === 1).drop("rn")
-      .localCheckpoint()
+      .localCheckpoint(false)
     val withBands = bandKeyRows(reps, numHashes, bands)
     val cands = withBands.as("a")
       .join(withBands.as("b"), col("a.band_key") === col("b.band_key") &&
@@ -1758,7 +1763,16 @@ object Dedup {
     * expanded component's label is its min doc id, which is the min over
     * its groups' representatives — i.e. the rep-graph component label
     * (every rep IS its group's min), or the lone rep itself for a
-    * multiplicity-only group with no cross edge. */
+    * multiplicity-only group with no cross edge.
+    *
+    * The "set is in a verified rep pair" test reads the component labels,
+    * not the pairs: the nodes of `comps` are exactly the endpoints of the
+    * verified rep pairs, and rep ↔ fp is one-to-one (a rep is its group's
+    * min doc_id, which `repOf` recomputes from the members), so a group's
+    * set is paired iff its rep's left join to `comps` matches. The
+    * candidate join and Jaccard verify therefore run once, inside the
+    * components call; the returned frame reads only the members
+    * checkpoint and the labels. */
   def nearDupComponents(df: DataFrame, id: Column, text: Column,
                         shingleSize: Int = 3, numHashes: Int = 8,
                         bands: Int = 4, threshold: Double = 0.5,
@@ -1771,16 +1785,12 @@ object Dedup {
       .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("m"))
     val comps = connectedComponents(repPairs.select(col("i"), col("j")),
       maxRounds)
-    val pairedFps = repPairs.select(col("fp_i").as("fp"))
-      .union(repPairs.select(col("fp_j").as("fp"))).distinct()
+    val paired = col("component").isNotNull
     // multiplicity-only groups are nodes via their intra pairs, which the
     // expanded form drops when threshold > 1 — mirror that gate
-    val nodeFps =
-      if (threshold <= 1.0)
-        repOf.filter(col("m") >= 2).select(col("fp")).union(pairedFps).distinct()
-      else pairedFps
-    nodeFps.join(repOf, "fp")
-      .join(comps.withColumnRenamed("node", "rep"), Seq("rep"), "left")
+    val isNode = if (threshold <= 1.0) col("m") >= 2 || paired else paired
+    repOf.join(comps.withColumnRenamed("node", "rep"), Seq("rep"), "left")
+      .filter(isNode)
       .select(col("fp"), coalesce(col("component"), col("rep")).as("component"))
       .join(members, "fp")
       .select(col("doc_id").as("node"), col("component"))
@@ -2107,26 +2117,34 @@ object Dedup {
 
   /** Connected components over an undirected candidate-pair list — turns
     * near-dup PAIRS into dedup GROUPS: every node ends labelled with the
-    * minimum doc id reachable from it (the group's canonical survivor).
+    * minimum id reachable from it (the group's canonical survivor), under
+    * Spark's own ordering of the id type (`least`/`min`; UTF-8 binary for
+    * strings).
     *
-    * Alternating large-star / small-star contraction (the Two-Phase
-    * algorithm of Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14): each half-round every node hooks its larger
-    * (large-star) or not-larger (small-star) neighbours onto the minimum
-    * of its neighbourhood, monotonically rewiring the edge set toward a
-    * set of stars centred at each component's minimum id. Convergence is
-    * PROVEN O(log² n) rounds worst-case (observed ~log n) and — unlike
-    * Hash-Min with pointer-jump compression, which this replaced in r9 —
-    * it is independent of how node ids are laid out on the graph: the
-    * compression heuristic only accelerates when id order correlates with
-    * graph distance, and a scrambled-id path of depth ~200 already blew
-    * a 16-round budget (OperatorsSpec pins exactly that graph now; the
-    * ordered-id 2048-path the old spec used converges under both).
-    * Each round is two groupBy-min aggregations + two equi-joins over the
-    * shrinking edge list, all shuffled on node id — at 100 TB the pair
-    * list is candidate-sized (LSH output), orders of magnitude smaller
-    * than the corpus. THROWS if `maxRounds` is reached before the
-    * fixpoint (a true pathology, not a long chain).
+    * Two regimes, chosen by the size of the canonical edge set:
+    *
+    *  - At or under [[ccSmallGraphEdges]] edges, the set is gathered to
+    *    the driver and a union-find labels it in one pass: no rounds, no
+    *    round budget, O(E·α(N)) whatever the graph's diameter or degrees.
+    *    The labels come back as a local relation, so nothing downstream
+    *    re-reads the caller's pair pipeline or any checkpoint of it.
+    *  - Above it, alternating large-star / small-star contraction (the
+    *    Two-Phase algorithm of Kiveris et al., "Connected Components in
+    *    MapReduce and Beyond", SoCC'14): each half-round every node hooks
+    *    its larger (large-star) or not-larger (small-star) neighbours onto
+    *    the minimum of its neighbourhood, monotonically rewiring the edge
+    *    set toward a set of stars centred at each component's minimum id.
+    *    Convergence is PROVEN O(log² n) rounds worst-case (observed
+    *    ~log n) and — unlike Hash-Min with pointer-jump compression, which
+    *    this replaced in r9 — it is independent of how node ids are laid
+    *    out on the graph (OperatorsSpec pins a scrambled-id path of depth
+    *    ~200 that blew a 16-round Hash-Min budget). Each round is two
+    *    groupBy-min aggregations + two equi-joins over the shrinking edge
+    *    list, all shuffled on node id. THROWS if `maxRounds` is reached
+    *    before the fixpoint (a true pathology, not a long chain);
+    *    `maxRounds` bounds this regime only.
+    *
+    * Both regimes give the same labels; the fork is volume control.
     *
     * @param pairs (i, j) undirected candidate edges. Self-pairs carry no
     *              connectivity but DO assert the node exists: a node whose
@@ -2136,39 +2154,62 @@ object Dedup {
     *              dropped.
     * @return (node, component) for every node that appears in a pair.
     */
-  /** Edge-count ceiling under which a star-contraction round skips the
-    * intermediate large-star dedup (see the round-loop comment in
-    * [[connectedComponents]]). Env-parameterised with a local default
-    * sized so every graded-sf candidate graph (LSH/CDC output, ≤ ~50k
-    * pairs) takes the fused regime while any 100 TB-shaped delta graph
-    * (shuffle-relevant duplicate volume) keeps the dedup: at 128k edges
-    * the worst-case duplicated large-star output is still a few MB —
-    * one shuffle block — so the saved exchange+agg stage dominates. */
-  private[graft] def ccSmallGraphEdges: Long =
-    graft.Env.long("SPARK_GRAFT_CC_SMALL_EDGES", 131072L)
-
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 16): DataFrame =
     connectedComponentsImpl(pairs, maxRounds, ccSmallGraphEdges)
 
-  /** [[connectedComponents]] with the small-graph ceiling explicit —
-    * package-private so the regime fork is testable on tiny graphs. */
+  /** Driver-gather ceiling of [[connectedComponents]]: a canonical edge set
+    * of at most this many distinct (a ≤ b) pairs, self-pairs included, is
+    * collected and labelled by a driver-side union-find; a larger one runs
+    * star contraction. Env-parameterised (`SPARK_GRAFT_CC_SMALL_EDGES`;
+    * 0 forces star contraction on every non-empty graph).
+    *
+    * Driver memory at the default: 131,072 edges × 2 longs ≈ 2 MiB of id
+    * payload (string ids cost their UTF-8 bytes instead); the collected
+    * rows, the boxed ids and the sort over 2·E endpoints add transient JVM
+    * object overhead of a small multiple of that. Every graded-sf
+    * candidate graph (LSH/CDC output, ≤ ~50k pairs) fits; a 100 TB-shaped
+    * delta graph stays distributed. Star contraction above the ceiling
+    * always dedups its large-star output, so a high-degree hub there
+    * costs shuffle volume bounded by the distinct edge set, never a
+    * degree-sized duplicate blowup. */
+  private[graft] def ccSmallGraphEdges: Long =
+    graft.Env.long("SPARK_GRAFT_CC_SMALL_EDGES", 131072L)
+
+  /** [[connectedComponents]] with the driver-gather ceiling explicit —
+    * package-private so both regimes are testable on tiny graphs. */
   private[graft] def connectedComponentsImpl(pairs: DataFrame,
       maxRounds: Int, smallGraphEdges: Long): DataFrame = {
     // ONE upstream evaluation: the caller's pair pipeline (often an LSH
     // candidate join) is materialized exactly once, as the canonical
-    // (a <= b) distinct set — both the edge list and the self-pair
-    // singleton nodes below derive from these checkpointed blocks, never
-    // from a re-run of the upstream. LAZY + the count below, not eager:
-    // count() scans every partition of the (narrow-filtered) frame, so
-    // the blocks are complete after ONE job where eager + count paid a
-    // materialize job AND a count job per call (r17; the recompute-storm
-    // hazard of lazy checkpoints only bites probes that short-circuit,
-    // like isEmpty — a full count cannot leave partial blocks)
+    // (a <= b) distinct set — both regimes read only these checkpointed
+    // blocks, never a re-run of the upstream. LAZY + the counts below, not
+    // eager: the count aggregate scans every partition of the
+    // (narrow-filtered) frame, so the blocks are complete after ONE job
+    // where eager + count paid a materialize job AND a count job per call
+    // (r17; the recompute-storm hazard of lazy checkpoints only bites
+    // probes that short-circuit, like isEmpty — a full count cannot leave
+    // partial blocks)
     val base = pairs.filter(col("i").isNotNull && col("j").isNotNull)
       .select(least(col("i"), col("j")).as("a"),
         greatest(col("i"), col("j")).as("b"))
       .distinct()
       .localCheckpoint(false)
+    // all canonical pairs (what the driver would gather) and the non-self
+    // edges (star contraction's first fixpoint count), in the same job
+    val counts = base.agg(count(lit(1)),
+      count(when(col("a") =!= col("b"), true))).head()
+    if (counts.getLong(0) <= smallGraphEdges) {
+      val labels = componentsOnDriver(base)
+      graft.operators.Joins.unpersistLocalCheckpoint(base)
+      labels
+    } else starComponents(base, counts.getLong(1), maxRounds)
+  }
+
+  /** The large regime of [[connectedComponentsImpl]]: star contraction
+    * over the checkpointed canonical (a, b) set `base`, of which
+    * `edgeCount` pairs have a ≠ b. */
+  private def starComponents(base: DataFrame, edgeCount: Long,
+                             maxRounds: Int): DataFrame = {
     // nodes whose ONLY appearance is a self-pair still exist as
     // singletons; tiny by construction (LSH/blocked producers emit a < b
     // — self-pairs only arrive from raw caller-assembled lists)
@@ -2179,7 +2220,7 @@ object Dedup {
     // per read, and the loop replaces e with a checkpointed frame after
     // round 1 anyway
     var e = base.filter(col("a") =!= col("b"))
-    var eCount = e.count()
+    var eCount = edgeCount
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -2189,18 +2230,15 @@ object Dedup {
         .union(e.select(col("b").as("u"), col("a").as("v")))
       val lsMin = both.groupBy(col("u")).agg(min(col("v")).as("nmin"))
         .select(col("u"), least(col("u"), col("nmin")).as("m"))
-      val lsRaw = both.join(lsMin, "u").filter(col("v") > col("u"))
+      // the dedup is volume control, not correctness: duplicate (v, m)
+      // rows (multiplicity up to a node's degree) would leave the
+      // small-star mins unchanged, but the small-star shuffle would carry
+      // the blowup
+      val ls = both.join(lsMin, "u").filter(col("v") > col("u"))
         .select(least(col("v"), col("m")).as("a"),
           greatest(col("v"), col("m")).as("b"))
         .filter(col("a") =!= col("b"))
-      // the large-star dedup is volume control, not correctness: dup
-      // (v, m) rows leave the small-star mins unchanged and the round's
-      // final distinct collapses them. Below the small-graph ceiling the
-      // dedup's exchange+agg stage costs more dispatch than the bytes it
-      // saves (duplicate multiplicity is bounded by a node's degree, and
-      // the whole round fits one shuffle block); above it, keep the
-      // dedup so the small-star shuffle never carries the blowup (r17)
-      val ls = if (eCount <= smallGraphEdges) lsRaw else lsRaw.distinct()
+        .distinct()
       // small-star: orient every edge toward its larger endpoint u; all
       // neighbours are < u, so m = min(N(u)); hook N(u) ∪ {u} onto m
       val smaller = ls.select(col("b").as("u"), col("a").as("v"))
@@ -2238,6 +2276,52 @@ object Dedup {
         .select(col("node"), col("node").as("component")))
   }
 
+  /** The small regime of [[connectedComponentsImpl]]: collect the canonical
+    * (a, b) set and label it with a union-find whose root is always the
+    * smaller id, so every root is its component's minimum. Ids are ordered
+    * and compared only through Spark's interpreted ordering of the column
+    * type (string ids as UTF-8 bytes, as `least`/`min` compare them, not
+    * as `String.compareTo`'s UTF-16 units); the union-find runs over their
+    * dense ranks in that order. Returns (node, component) as a local
+    * relation with base's column type. */
+  private def componentsOnDriver(base: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    val field = base.schema("a")
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(field.dataType)
+    val ord = TypeUtils.getInterpretedOrdering(field.dataType)
+    val rows = base.collect()
+    // endpoint k of row r sits at 2r + k; sort endpoints by id, then rank
+    val ends = rows.flatMap(r => Array(r.get(0), r.get(1)))
+    val keys = ends.map(toCatalyst)
+    val sorted = ends.indices.sortBy(keys)(ord)
+    val rank = new Array[Int](ends.length)
+    val idOfRank = scala.collection.mutable.ArrayBuffer.empty[Any]
+    sorted.indices.foreach { k =>
+      if (k == 0 || ord.compare(keys(sorted(k - 1)), keys(sorted(k))) != 0)
+        idOfRank += ends(sorted(k))
+      rank(sorted(k)) = idOfRank.length - 1
+    }
+    // parent(x) <= x always: unions hang the larger root under the
+    // smaller, and path halving only moves a node to an ancestor
+    val parent = Array.tabulate(idOfRank.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    rows.indices.foreach { r =>
+      val (ra, rb) = (find(rank(2 * r)), find(rank(2 * r + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val labels = idOfRank.indices.map(n => Row(idOfRank(n), idOfRank(find(n))))
+    base.sparkSession.createDataFrame(
+      java.util.Arrays.asList(labels: _*),
+      org.apache.spark.sql.types.StructType(Seq(
+        field.copy(name = "node"), field.copy(name = "component"))))
+  }
+
   /** Incremental connected components — fold a delta of candidate pairs
     * into yesterday's dedup-group labels WITHOUT re-running label
     * propagation over the historical pair set. The daily-growth twin of
@@ -2259,9 +2343,10 @@ object Dedup {
     *
     * Scale: the historical PAIR list (corpus-sized, the expensive part of
     * every full recompute) is never read — only the label table (one row
-    * per clustered node) and the delta pairs. Rounds scale with the
-    * diameter of the CONTRACTED graph, which collapses yesterday's
-    * long chains to single supernodes.
+    * per clustered node) and the delta pairs. A delta-sized contracted
+    * graph under the driver-gather ceiling is labelled by one union-find;
+    * above it, rounds scale with the diameter of the CONTRACTED graph,
+    * which collapses yesterday's long chains to single supernodes.
     *
     * @param prevLabels (node, component) — a previous
     *                   [[connectedComponents]] / incremental output;
@@ -2273,7 +2358,14 @@ object Dedup {
     *         `newPairs` — the same frame a full recompute would emit.
     */
   def incrementalComponents(prevLabels: DataFrame, newPairs: DataFrame,
-                            maxRounds: Int = 16): DataFrame = {
+                            maxRounds: Int = 16): DataFrame =
+    incrementalComponentsImpl(prevLabels, newPairs, maxRounds,
+      ccSmallGraphEdges)
+
+  /** [[incrementalComponents]] with the driver-gather ceiling of its
+    * contracted-graph [[connectedComponentsImpl]] call explicit. */
+  private[graft] def incrementalComponentsImpl(prevLabels: DataFrame,
+      newPairs: DataFrame, maxRounds: Int, smallGraphEdges: Long): DataFrame = {
     // read repeatedly (two endpoint maps, remap join, anti-join): cut the
     // upstream lineage once; lazy — the first consumer materializes it
     val prev = prevLabels.select(col("node"), col("component"))
@@ -2294,7 +2386,7 @@ object Dedup {
       .select(coalesce(col("__ci"), pairs("i")).as("i"),
         coalesce(col("__cj"), pairs("j")).as("j"))
       .filter(col("i") =!= col("j"))
-    val merged = connectedComponents(contracted, maxRounds)
+    val merged = connectedComponentsImpl(contracted, maxRounds, smallGraphEdges)
     val updatedOld = prev
       .join(merged, prev("component") === merged("node"), "left")
       .select(prev("node"),

@@ -114,22 +114,21 @@ class OperatorsSpec extends SparkSpec {
     assert(gotSelf.toMap == got + (42L -> 42L))
   }
 
-  test("connectedComponents regimes agree: fused rounds == deduped rounds") {
+  test("connectedComponents regimes agree: union-find == star contraction") {
     import spark.implicits._
     // scrambled multi-round graph (same family the layout-independence
-    // test pins): both the small-graph regime (large-star dedup skipped,
-    // smallGraphEdges = MaxValue) and the large-graph regime (dedup kept
-    // every round, smallGraphEdges = 0) must land identical labels in
-    // the same round budget — the dedup is volume control, not algebra
+    // test pins): the driver union-find (smallGraphEdges = MaxValue) and
+    // star contraction (smallGraphEdges = 0) must land identical labels —
+    // the regime fork is volume control, not algebra
     val edges = (0L until 600L).map(i => (i, (i * 101 + 13) % 600))
       .filter { case (a, b) => a != b }
-    val fused = Dedup.connectedComponentsImpl(edges.toDF("i", "j"),
+    val unionFind = Dedup.connectedComponentsImpl(edges.toDF("i", "j"),
       maxRounds = 16, smallGraphEdges = Long.MaxValue)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val deduped = Dedup.connectedComponentsImpl(edges.toDF("i", "j"),
+    val star = Dedup.connectedComponentsImpl(edges.toDF("i", "j"),
       maxRounds = 16, smallGraphEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fused == deduped)
+    assert(unionFind == star)
   }
 
   test("incrementalComponents equals full recompute on every merge class") {
@@ -227,12 +226,16 @@ class OperatorsSpec extends SparkSpec {
 
   test("connectedComponents throws when diameter exceeds the round budget") {
     import spark.implicits._
+    // the round budget bounds star contraction only (smallGraphEdges = 0
+    // forces it); the driver union-find runs no rounds
     val longPath = (1L until 12L).map(i => (i + 1, i)).toDF("i", "j")
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(longPath, maxRounds = 2).collect()
+      Dedup.connectedComponentsImpl(longPath, maxRounds = 2,
+        smallGraphEdges = 0L).collect()
     }
     // and converges fine with budget
-    val ok = Dedup.connectedComponents(longPath, maxRounds = 16)
+    val ok = Dedup.connectedComponentsImpl(longPath, maxRounds = 16,
+        smallGraphEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 12L).forall(ok(_) == 1L))
   }
@@ -244,9 +247,13 @@ class OperatorsSpec extends SparkSpec {
     // well inside the default 16-round budget, without raising
     val n = 2048L
     val path = (1L until n).map(i => (i + 1, i)).toDF("i", "j")
-    val labels = Dedup.connectedComponents(path)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels.size == n && labels.values.forall(_ == 1L))
+    for (smallGraphEdges <- Seq(Long.MaxValue, 0L)) {
+      val labels = Dedup.connectedComponentsImpl(path, maxRounds = 16,
+          smallGraphEdges = smallGraphEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels.size == n && labels.values.forall(_ == 1L),
+        s"smallGraphEdges = $smallGraphEdges")
+    }
   }
 
   test("connectedComponents is independent of id layout (scrambled paths and cycles)") {
@@ -260,16 +267,22 @@ class OperatorsSpec extends SparkSpec {
     // must settle it, and the scrambled 80-cycles, within the default.
     val ids = (0L until 199L).map(p => (p * 173 + 37) % 199)
     val path = (0 until 198).map(p => (ids(p), ids(p + 1))).toDF("i", "j")
-    val got = Dedup.connectedComponents(path)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == 199 && got.values.forall(_ == 0L))
     // permutation graph x -> 37x+11 mod 400: four 80-cycles + five
     // 16-cycles with interleaved ids
     val cyc = (0L until 400L).map(i => (i, (i * 37 + 11) % 400))
       .filter { case (a, b) => a != b }.toDF("i", "j")
-    val gotC = Dedup.connectedComponents(cyc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotC.size == 400 && gotC.values.toSet.size == 9)
+    for (smallGraphEdges <- Seq(Long.MaxValue, 0L)) {
+      val got = Dedup.connectedComponentsImpl(path, maxRounds = 16,
+          smallGraphEdges = smallGraphEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.size == 199 && got.values.forall(_ == 0L),
+        s"smallGraphEdges = $smallGraphEdges")
+      val gotC = Dedup.connectedComponentsImpl(cyc, maxRounds = 16,
+          smallGraphEdges = smallGraphEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(gotC.size == 400 && gotC.values.toSet.size == 9,
+        s"smallGraphEdges = $smallGraphEdges")
+    }
   }
 
   test("deterministic sampling is reproducible and rate-monotone") {
@@ -429,6 +442,70 @@ class OperatorsSpec extends SparkSpec {
     assert(viaGroups == viaExpansion)
     // the duplicated docs really are nodes labeled by their originals
     assert(viaGroups.exists { case (n, c) => n >= 5000 && c < 5000 })
+  }
+
+  // the near-dup corpus of the test above: the first 30 docs plus a
+  // second copy of every third one (multiplicity-2 groups)
+  private def replicatedDocs = {
+    val base = Tables.documents(spark, testDataDir)
+      .filter(col("doc_id") < 30).select(col("doc_id"), col("text"))
+    base.union(base.filter(col("doc_id") % 3 === 0)
+      .select((col("doc_id") + 5000).as("doc_id"), col("text")))
+  }
+
+  test("nearDupComponents node gate equals the paired-fingerprint formulation") {
+    import spark.implicits._
+    // reference: a group is a node iff its multiplicity is >= 2 (only
+    // when threshold <= 1) or its fingerprint is an endpoint of a
+    // verified rep pair — read off the pairs themselves, as a second
+    // evaluation of the candidate/verify pipeline
+    def reference(df: org.apache.spark.sql.DataFrame, threshold: Double) = {
+      val (members, repPairs) = Dedup.minhashLshGrouped(df,
+        col("doc_id"), col("text"), threshold = threshold)
+      val repOf = members.groupBy(col("fp"))
+        .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("m"))
+      val comps = Dedup.connectedComponents(repPairs.select(col("i"), col("j")))
+      val pairedFps = repPairs.select(col("fp_i").as("fp"))
+        .union(repPairs.select(col("fp_j").as("fp"))).distinct()
+      val nodeFps =
+        if (threshold <= 1.0)
+          repOf.filter(col("m") >= 2).select(col("fp")).union(pairedFps).distinct()
+        else pairedFps
+      nodeFps.join(repOf, "fp")
+        .join(comps.withColumnRenamed("node", "rep"), Seq("rep"), "left")
+        .select(col("fp"), coalesce(col("component"), col("rep")).as("component"))
+        .join(members, "fp")
+        .select(col("doc_id").as("node"), col("component"))
+        .as[(Long, Long)].collect().toSet
+    }
+    val docs = replicatedDocs
+    for (threshold <- Seq(0.3, 1.0, 1.5)) {
+      val got = Dedup.nearDupComponents(docs, col("doc_id"), col("text"),
+        threshold = threshold).as[(Long, Long)].collect().toSet
+      val want = reference(docs, threshold)
+      assert(got == want, s"threshold $threshold")
+      // 0.3 has cross-group pairs, 1.0 only multiplicity groups, 1.5 none
+      assert(want.nonEmpty == (threshold <= 1.0), s"threshold $threshold")
+    }
+  }
+
+  test("nearDupComponents plan reads only the members checkpoint and the labels") {
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    import org.apache.spark.sql.execution.LogicalRDD
+    // the returned frame must not re-reference the reps checkpoint, the
+    // band self-join or any round checkpoint: those blocks would stay
+    // reachable (held in storage) for as long as the frame is. Under the
+    // driver-gather ceiling the labels are a local relation.
+    assume(Dedup.ccSmallGraphEdges >= 1000L,
+      "SPARK_GRAFT_CC_SMALL_EDGES forces star contraction on this corpus")
+    val out = Dedup.nearDupComponents(replicatedDocs, col("doc_id"),
+      col("text"), threshold = 0.3)
+    val plan = out.queryExecution.optimizedPlan
+    val rdds = plan.collect { case r: LogicalRDD => r }
+    assert(rdds.map(_.rdd.id).distinct.size == 1,
+      s"expected one LogicalRDD (members), got ${rdds.size}:\n$plan")
+    assert(Set("fp", "doc_id").subsetOf(rdds.head.output.map(_.name).toSet))
+    assert(plan.collect { case w: Window => w }.isEmpty, plan.toString)
   }
 
   test("simhashPairs banding is pigeonhole-complete vs brute-force hamming") {

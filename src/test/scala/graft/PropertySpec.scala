@@ -156,21 +156,26 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  // sequential union-find oracle: every node of a pair (self-pairs
+  // included) labelled with its component's minimum under `ord`
+  private def unionFindLabels[T](pairs: Seq[(T, T)])(
+      implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map[T, T]()
+    def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+    }
+    pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(n => n -> find(n)).toMap
+  }
+
   test("property: connectedComponents matches a union-find oracle") {
     check(Prop.forAll(pairsGen) { pairs =>
       pairs.isEmpty || {
-        // sequential union-find oracle
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        pairs.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-        val expected = nodes.map(n => n -> find(n)).toMap
+        val expected = unionFindLabels(pairs)
         val df = spark.createDataFrame(
           pairs.map { case (a, b) => Row(a, b) }.asJava,
           T.StructType(Seq(T.StructField("i", T.LongType),
@@ -180,6 +185,87 @@ class PropertySpec extends SparkSpec {
         got == expected
       }
     })
+  }
+
+  // the two regimes of connectedComponentsImpl: driver union-find and
+  // star contraction
+  private val regimes = Seq(Long.MaxValue, 0L)
+
+  private def pairDf(pairs: Seq[(Any, Any)], t: T.DataType) =
+    spark.createDataFrame(pairs.map { case (a, b) => Row(a, b) }.asJava,
+      T.StructType(Seq(T.StructField("i", t), T.StructField("j", t))))
+
+  private def labels(df: org.apache.spark.sql.DataFrame, smallGraphEdges: Long) =
+    graft.operators.Dedup.connectedComponentsImpl(df, maxRounds = 16,
+      smallGraphEdges = smallGraphEdges).collect().map(r => r.get(0) -> r.get(1))
+
+  // seeded random graph over Int ids 0 until n: m random pairs, about one
+  // endpoint in 20 null (a null carries no edge and names no node), plus
+  // three self-pairs
+  private def randomIntPairs(seed: Int, n: Int, m: Int): Seq[(Any, Any)] = {
+    val rnd = new scala.util.Random(seed)
+    def id(): Any = if (rnd.nextInt(20) == 0) null else Int.box(rnd.nextInt(n))
+    Seq.fill(m)((id(), id())) ++
+      Seq.fill(3) { val x = Int.box(rnd.nextInt(n)); (x, x) }
+  }
+
+  test("property: union-find and star contraction agree with the oracle (Int ids, self-pairs, nulls)") {
+    for ((seed, n, m) <- Seq((1, 12, 8), (2, 40, 30), (3, 60, 90), (4, 25, 60))) {
+      val pairs = randomIntPairs(seed, n, m)
+      val expected = unionFindLabels(pairs.collect {
+        case (a: Integer, b: Integer) => (a.intValue, b.intValue) })
+      val df = pairDf(pairs, T.IntegerType)
+      for (regime <- regimes) {
+        val got = labels(df, regime)
+        assert(got.length == got.toMap.size, s"seed $seed: duplicate node labels")
+        assert(got.toMap == expected, s"seed $seed, smallGraphEdges $regime")
+      }
+    }
+  }
+
+  test("property: string ids are labelled by Spark's UTF-8 order, not UTF-16's") {
+    // "Ａ" (U+FF21, UTF-8 EF BC A1) sorts below "😀" (U+1F600, UTF-8
+    // F0 9F 98 80) as Spark compares strings, but ABOVE it under
+    // String.compareTo, whose surrogate unit D83D is below FF21
+    val utf8: Ordering[String] = Ordering.by[String, Iterable[Int]](
+      _.getBytes("UTF-8").map(_ & 0xff).toSeq)(Ordering.Iterable[Int])
+    // the planted component {😀, Ａ} shares no id with the random ones
+    val planted = Seq[(Any, Any)](("😀", "Ａ"))
+    val pool = Seq("a", "z", "中", "𝔸", "ｚ", "é", "Ａb", "😀a", "𝄞", "ｶ")
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val pairs = planted ++ Seq.fill(6)(
+        (pool(rnd.nextInt(pool.size)), pool(rnd.nextInt(pool.size))))
+      val typed = pairs.map { case (a, b) => (a.toString, b.toString) }
+      val expected = unionFindLabels(typed)(utf8)
+      // the case discriminates: a String.compareTo labelling differs
+      assert(unionFindLabels(typed)(Ordering.String) != expected)
+      assert(expected("😀") == "Ａ")
+      for (regime <- regimes)
+        assert(labels(pairDf(pairs, T.StringType), regime).toMap == expected,
+          s"seed $seed, smallGraphEdges $regime")
+    }
+  }
+
+  test("property: incrementalComponents equals a full recompute in both regimes") {
+    import graft.operators.Dedup
+    for (seed <- Seq(5, 6)) {
+      val all = randomIntPairs(seed, 50, 45).collect {
+        case (a: Integer, b: Integer) => (a.longValue, b.longValue) }
+      val rnd = new scala.util.Random(seed)
+      val (delta, old) = all.partition(_ => rnd.nextInt(4) == 0)
+      val expected = unionFindLabels(all)
+      for (regime <- regimes) {
+        val prev = Dedup.connectedComponentsImpl(pairDf(old, T.LongType),
+          maxRounds = 16, smallGraphEdges = regime)
+        val got = Dedup.incrementalComponentsImpl(prev, pairDf(delta, T.LongType),
+          maxRounds = 16, smallGraphEdges = regime)
+          .collect().map(r => r.get(0) -> r.get(1))
+        assert(got.length == got.toMap.size, s"seed $seed: duplicate node labels")
+        assert(got.toMap == labels(pairDf(all, T.LongType), regime).toMap)
+        assert(got.toMap == expected, s"seed $seed, smallGraphEdges $regime")
+      }
+    }
   }
 
   test("property: int8 quantization error never exceeds half a step, any vector") {

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * heads are 0..49 — the same family partition the driver's oracle
   * expresses as `user_id % 50`, but here it EMERGES from the graph walk,
   * exactly as the reference's families are obsolescence chains resolved to
-  * their head PID). Queries consume it as a broadcast dimension join.
+  * their head PID).
   *
   * Scale: in production this dimension comes from the (small) metadata
   * store, not the fact table; it is built once per sync cycle and is tiny
@@ -30,6 +30,21 @@ import org.apache.spark.sql.functions._
   * depth 20, `pid_resolution.py:236`); the synthetic u−50 chains grow with
   * the id domain, which pointer jumping absorbs in O(log depth) rounds.
   *
+  * Requests resolve ids on the driver, as the reference resolves PIDs to
+  * an id list before it sends one `terms` filter to Elasticsearch.
+  * Building the family, node or portal dim also collects it into a
+  * driver-held membership index — identifier → family and family →
+  * members, node → members, portal → members — so the build, not the
+  * first request, pays for it. A dataset, repository or portal filter
+  * then reads the member ids it needs from the index (work proportional to
+  * the ids returned, never to the dim) and filters the fact scan with one
+  * [[inIds]] set: no per-request broadcast, no Spark job. The index costs
+  * about 40 bytes per identifier (24 for families, 8 each for nodes and
+  * portals) plus about 100 per family, node and portal. Spark's
+  * `SizeEstimator` puts it at 31,160 bytes for the 650 identifiers (50
+  * families) of the `api_serve` benchmark, and at 2,605,160 bytes for
+  * 65,000 identifiers.
+  *
   * The same per-(session, dir) cache also holds the resolved events
   * relation ([[events]]): the partition listing and parquet schema
   * inference run once, not on every request. Only the handle is kept (no
@@ -39,6 +54,11 @@ import org.apache.spark.sql.functions._
   */
 object IdentifierDim {
 
+  /** One built dim: its frame and its driver-held index (`()` for dims
+    * the request path does not resolve ids against). */
+  private final case class Entry[+I](session: SparkSession, df: DataFrame,
+                                     index: I)
+
   /** Built dims — and the resolved events relation — keyed by (session
     * UUID, table dir, name): the materialized-dimension analogue of the
     * reference's sync-job output.
@@ -47,13 +67,13 @@ object IdentifierDim {
     * session's plan).
     *
     * Lifecycle: an entry lives until [[invalidate]] (call it on session
-    * close) or until its SparkContext stops ([[sweep]] then drops it).
-    * GC-based eviction is deliberately NOT offered: a cached Dataset
-    * strongly references its owning session, so a session with live cache
-    * entries is never collectable — sessions on a long-lived shared context
-    * must be invalidated explicitly. */
+    * close) or until its SparkContext stops ([[sweep]] then drops it); its
+    * driver index goes with it. GC-based eviction is deliberately NOT
+    * offered: a cached Dataset strongly references its owning session, so
+    * a session with live cache entries is never collectable — sessions on
+    * a long-lived shared context must be invalidated explicitly. */
   private val cache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), (SparkSession, DataFrame)]
+    .empty[(String, String, String), Entry[Any]]
 
   /** Stable unique id per session: minted once per session object and held
     * weakly, so a GC'd session's id is never reused (identityHashCode can
@@ -65,25 +85,37 @@ object IdentifierDim {
     sessionIds.computeIfAbsent(spark,
       _ => java.util.UUID.randomUUID().toString)
 
-  private def cached(spark: SparkSession, dir: String, which: String,
-                     pin: Boolean = true)
-                    (build: => DataFrame): DataFrame = {
+  /** The entry for (session, dir, which), built on first use: the frame
+    * (pinned as checkpoint blocks unless `pin` is false), then its driver
+    * index from the built frame. Every entry under one key is built by
+    * the same call site, so the index type `I` is the key's. */
+  private def indexed[I](spark: SparkSession, dir: String, which: String,
+                         pin: Boolean = true)(build: => DataFrame)
+                        (index: DataFrame => I): Entry[I] = {
     sweep()
     val key = (sessionKey(spark), dir, which)
     cache.get(key) match {
-      case Some((_, df)) => df
+      case Some(e) => e.asInstanceOf[Entry[I]]
       case None =>
         // TrieMap.getOrElseUpdate can run the thunk in two racing threads
         // and silently drop one result — whose checkpoint blocks would pin
         // the block manager forever. Build outside the map, then let
         // putIfAbsent decide; the loser unpersists its own build.
         val built = if (pin) build.localCheckpoint() else build
-        cache.putIfAbsent(key, (spark, built)) match {
-          case Some((_, winner)) => release(built); winner
-          case None => built
+        val entry =
+          try Entry(spark, built, index(built))
+          catch { case e: Throwable => release(built); throw e }
+        cache.putIfAbsent(key, entry) match {
+          case Some(winner) => release(built); winner.asInstanceOf[Entry[I]]
+          case None => entry
         }
     }
   }
+
+  private def cached(spark: SparkSession, dir: String, which: String,
+                     pin: Boolean = true)
+                    (build: => DataFrame): DataFrame =
+    indexed(spark, dir, which, pin)(build)(_ => ()).df
 
   /** General materialized-dimension hook for other modules: build once per
     * (session, dir), pin as checkpoint blocks, serve to every consumer —
@@ -123,8 +155,8 @@ object IdentifierDim {
     * with it). Runs on every build, so the map is bounded by entries of
     * LIVE contexts instead of growing for the JVM lifetime. */
   def sweep(): Unit =
-    cache.foreach { case (k, (s, _)) =>
-      if (s.sparkContext.isStopped) cache.remove(k)
+    cache.foreach { case (k, e) =>
+      if (e.session.sparkContext.isStopped) cache.remove(k)
     }
 
   /** Explicit eviction for one session (call on session close, or after
@@ -134,7 +166,7 @@ object IdentifierDim {
   def invalidate(spark: SparkSession): Unit = {
     val key = sessionKey(spark)
     cache.keys.filter(_._1 == key).foreach { k =>
-      cache.remove(k).foreach { case (_, df) => release(df) }
+      cache.remove(k).foreach(e => release(e.df))
     }
   }
 
@@ -148,72 +180,123 @@ object IdentifierDim {
   /** (user_id, family_id): each identifier mapped to its obsolescence-chain
     * head by pointer jumping (J2). maxDepth 200 guarantees convergence to
     * depth 3124 (growth 5^rounds); the resolve exits early as soon as all
-    * chains settle. */
+    * chains settle. Building it also builds its driver index
+    * ([[Families]]), which [[familyMembers]] reads. */
   def familyDim(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "family") {
+    family(spark, dir).df
+
+  private def family(spark: SparkSession, dir: String): Entry[Families] =
+    indexed(spark, dir, "family") {
       Joins.resolveRoots(versionEdges(spark, dir), maxDepth = 200,
         edgesCoverAllNodes = true, jumpsPerRound = 4)
         .select(col("node").as("user_id"), col("root").as("family_id"))
-    }
+    }(dim => Families(pairs[Long](dim, "family_id")))
 
   /** (user_id, portal_id) membership pairs — the flattened form of the
     * reference's `portalIdentifier[]` arrays (synthetic membership: portal
-    * p holds ids ≡ p mod 7; production loads the real membership rows). */
+    * p holds ids ≡ p mod 7; production loads the real membership rows).
+    * Building it also builds its driver index, which [[portalMembers]]
+    * reads. */
   def portalDim(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "portal") {
+    portal(spark, dir).df
+
+  private def portal(spark: SparkSession, dir: String): Entry[Groups[Long]] =
+    indexed(spark, dir, "portal") {
       events(spark, dir).select(col("user_id")).distinct()
         .withColumn("portal_id", pmod(col("user_id"), lit(7)))
-    }
+    }(dim => Groups(pairs[Long](dim, "portal_id")))
 
-  /** All identifiers in the families of the requested ids: the dim rows
-    * whose family is one of the requested ids' families, plus the requested
-    * ids themselves. Ids absent from the dimension thus pass through as
-    * singleton members — the reference falls back to filtering by the raw
-    * PID when the identifiers index has no entry for it — and an id present
-    * in the dim is already its own family's member (every dim row has a
-    * non-null root), so the union adds no id outside the families. The
-    * result may repeat ids; it feeds a semi-join, which ignores that.
-    *
-    * The families come from an [[inIds]] filter on the checkpointed dim,
-    * the members from one broadcast left-semi join against it, and the ids
-    * are a local relation with exact stats: the plan reads no fact table
-    * and needs no shuffle and no `distinct`. */
+  /** All identifiers in the families of the requested ids, resolved on the
+    * driver from the family dim's index: the requested ids themselves plus
+    * every member of their families. Ids absent from the dimension thus
+    * pass through as singleton members — the reference falls back to
+    * filtering by the raw PID when the identifiers index has no entry for
+    * it — and an id present in the dim is already its own family's member,
+    * so the union adds no id outside the families. The work is one
+    * bisection per requested id plus the members returned, whatever the
+    * dim's size; it reads no Spark frame and launches no job once the dim
+    * is built. */
   def familyMembers(spark: SparkSession, dir: String,
-                    ids: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    val dim = familyDim(spark, dir)
-    val requested = ids.toDF("user_id")
-    val families = dim.filter(inIds(col("user_id"), ids))
-      .select(col("family_id"))
-    dim.join(broadcast(families), Seq("family_id"), "left_semi")
-      .select(col("user_id"))
-      .union(requested)
-  }
+                    ids: Seq[Long]): Set[Long] =
+    family(spark, dir).index.expand(ids)
 
   /** (user_id, node_id, country) attribution dimension — the reference's
     * node dictionary join (J6, `metricsreporter.py:678-703`) plus the geo
     * attribution its events carry. The CONTENT is synthetic (driver tables
     * have no node/geo columns; the formulas live in
     * [[graft.reports.CounterReport.nodeOf]]/`countryOf`), but the SHAPE is
-    * the production one: a small dimension built once per sync cycle,
-    * checkpointed, and broadcast-joined into the report/API paths — at
-    * 1000 executors the node dim is a broadcast join, never a
-    * constant-folded array lookup on the fact side. */
+    * the production one: a small dimension built once per sync cycle and
+    * checkpointed. The report paths and the API's `country` dimension
+    * broadcast-join it, so at 1000 executors the node dim is a broadcast
+    * join, never a constant-folded array lookup on the fact side. The
+    * API's repository filter instead reads the node → members index built
+    * with it ([[nodeMembers]]), as the reference sends a resolved id list
+    * to Elasticsearch as a `terms` filter. */
   def nodeDim(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "node") {
+    node(spark, dir).df
+
+  private def node(spark: SparkSession, dir: String): Entry[Groups[String]] =
+    indexed(spark, dir, "node") {
       events(spark, dir).select(col("user_id")).distinct()
         .withColumn("node_id",
           graft.reports.CounterReport.nodeOf(col("user_id")))
         .withColumn("country",
           graft.reports.CounterReport.countryOf(col("user_id")))
-    }
+    }(dim => Groups(pairs[String](dim, "node_id")))
 
-  /** All member identifiers of the requested portals. */
+  /** All member identifiers of the requested nodes (none for an unknown
+    * node), from the node dim's driver index. */
+  def nodeMembers(spark: SparkSession, dir: String,
+                  nodes: Seq[String]): Set[Long] =
+    node(spark, dir).index(nodes)
+
+  /** All member identifiers of the requested portals, taken mod 7 as the
+    * synthetic membership is, from the portal dim's driver index. */
   def portalMembers(spark: SparkSession, dir: String,
-                    portals: Seq[Long]): DataFrame =
-    portalDim(spark, dir)
-      .filter(inIds(col("portal_id"), portals.map(p => ((p % 7) + 7) % 7)))
-      .select(col("user_id"))
+                    portals: Seq[Long]): Set[Long] =
+    portal(spark, dir).index(portals.map(p => ((p % 7) + 7) % 7))
+
+  /** A dim's (user_id, `key`) rows on the driver, rows with a null in
+    * either column left out: an equi-join on them never matched. One job
+    * over the dim's checkpoint blocks, run when the dim is built. */
+  private def pairs[K](dim: DataFrame, key: String): Array[(Long, K)] =
+    dim.select(col("user_id"), col(key))
+      .where(col("user_id").isNotNull && col(key).isNotNull)
+      .collect().map(r => (r.getLong(0), r.getAs[K](1)))
+
+  /** Group key → its member ids, held on the driver: one `Long` array per
+    * key, so 8 bytes per identifier plus a map entry per key. */
+  private final class Groups[K](members: Map[K, Array[Long]]) {
+    def apply(keys: Seq[K]): Set[Long] =
+      keys.distinct.iterator
+        .flatMap(k => members.getOrElse(k, Array.emptyLongArray)).toSet
+  }
+
+  private object Groups {
+    def apply[K](pairs: Array[(Long, K)]): Groups[K] =
+      new Groups(pairs.groupMap(_._2)(_._1))
+  }
+
+  /** The family dim on the driver: every identifier in `ids` (sorted), its
+    * family at the same position of `family`, and each family's members —
+    * 24 bytes per identifier plus a map entry per family. */
+  private final class Families(ids: Array[Long], family: Array[Long],
+                               members: Groups[Long]) {
+    def expand(requested: Seq[Long]): Set[Long] = {
+      val families = requested.flatMap { id =>
+        val i = java.util.Arrays.binarySearch(ids, id)
+        if (i >= 0) Some(family(i)) else None
+      }
+      requested.toSet ++ members(families)
+    }
+  }
+
+  private object Families {
+    def apply(pairs: Array[(Long, Long)]): Families = {
+      val sorted = pairs.sortBy(_._1)
+      new Families(sorted.map(_._1), sorted.map(_._2), Groups(pairs))
+    }
+  }
 
   /** `c IN (ids)` as Spark's set-valued `InSet`, the form the optimizer
     * itself gives lists longer than ten values. A short `isin` list stays
@@ -223,6 +306,6 @@ object IdentifierDim {
     * one class in Spark's codegen cache (100 entries by default) instead
     * of evicting the others'. It still reaches the parquet scan as an
     * `In` pushdown. */
-  private[api] def inIds(c: Column, ids: Seq[Long]): Column =
+  private[api] def inIds(c: Column, ids: Iterable[Long]): Column =
     GraftShims.column(InSet(GraftShims.expression(c), ids.toSet[Any]))
 }

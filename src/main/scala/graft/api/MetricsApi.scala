@@ -4,8 +4,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 import graft.operators.MetricsKernel
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** `MetricsRequest` filter clause (`metricsreader.py:108-161`):
   * interpretAs ∈ list | range. */
@@ -20,9 +23,24 @@ case class MetricsRequest(metrics: Seq[String], filterBy: Seq[MetricsFilter],
   * interpreted into one declarative DataFrame plan (SURVEY.md §3.1-3.2).
   * The reference hand-builds ES DSL per (filterType, interpretAs) pair and
   * post-processes in three near-identical 220-line Python routines
-  * (`metricsreader.py:1596-2262`); here the dispatch produces a single
-  * parameterized plan — filter → pivot-agg → zero-fill — and Catalyst
-  * handles the rest.
+  * (`metricsreader.py:1596-2262`). Here a request is split the same way,
+  * between the driver and one distributed step:
+  *
+  *  - id lists (dataset families, repository and portal members) are
+  *    resolved on the driver from [[IdentifierDim]]'s membership indexes
+  *    and filter the fact scan as one `InSet`, as the reference sends a
+  *    resolved `terms` filter;
+  *  - zero-fill is folded into the one aggregation: the period spine's
+  *    rows are unioned into the filtered events with a null `event_type`,
+  *    so they add their periods with 0 counts and need no join;
+  *  - [[columnarResponse]] collects that long result (periods × metrics
+  *    rows at most) and assembles the parallel arrays on the driver, as
+  *    the reference does client-side.
+  *
+  * A request then runs one grouped count: its shuffle-map job and its
+  * result job. Only a `country` groupBy adds a job, for its broadcast join
+  * to the node dim. [[interpret]] itself stays a lazy
+  * plan and launches no job once the session's dims are built.
   */
 object MetricsApi {
 
@@ -73,15 +91,12 @@ object MetricsApi {
       (f.filterType, f.interpretAs) match {
         case ("dataset", "list") =>
           // J4: expand requested ids to their identifier families through
-          // the materialized identifiers dimension, then keep any family
-          // member via a broadcast semi-join (`metricsreader.py:1259-1343`)
-          // — the fact scan is filtered by a BroadcastHashJoin, exactly the
-          // plan a 1000-executor run needs (no modulo shortcut). The member
-          // frame reads only the checkpointed dim and the request's ids, so
-          // the fact table is scanned once and nothing shuffles.
-          val members = IdentifierDim.familyMembers(spark, dir,
-            f.values.map(parseLong("dataset", _)))
-          df.join(broadcast(members), Seq("user_id"), "left_semi")
+          // the identifiers dimension's driver index, then keep any family
+          // member (`metricsreader.py:1259-1343`) — the resolved id list is
+          // the reference's `terms` filter, not a modulo shortcut
+          df.filter(IdentifierDim.inIds(col("user_id"),
+            IdentifierDim.familyMembers(spark, dir,
+              f.values.map(parseLong("dataset", _)))))
         case ("user" | "group", "list") => // group = list of user subjects
           // numeric ids filter natively (In-filter reaches the parquet
           // scan); a string-side cast on the column would block pushdown
@@ -93,17 +108,13 @@ object MetricsApi {
           df.filter(col("event_type").isin(f.values: _*))
         case ("repository", "list") =>
           // F3: node filter, skipped for the CN aggregate node
-          // (`metricsreader.py:745-751`). Membership comes from the
-          // materialized node dimension via a broadcast semi-join (J6) —
-          // the fact side is filtered by a BroadcastHashJoin, not an
-          // array-lookup expression.
+          // (`metricsreader.py:745-751`). Membership comes from the node
+          // dimension's driver index (J6) as a resolved id list, not an
+          // array-lookup expression on the fact side.
           val nodes = f.values.filterNot(_ == "urn:node:CN")
           if (nodes.isEmpty) df
-          else {
-            val members = IdentifierDim.nodeDim(spark, dir)
-              .filter(col("node_id").isin(nodes: _*)).select(col("user_id"))
-            df.join(broadcast(members), Seq("user_id"), "left_semi")
-          }
+          else df.filter(IdentifierDim.inIds(col("user_id"),
+            IdentifierDim.nodeMembers(spark, dir, nodes)))
         case ("time" | "month" | "day" | "year", "range") =>
           // the reference names the range filter after the period unit and
           // sends %m/%d/%Y dates (`metricsreader.py:702-709`); accept both
@@ -122,11 +133,10 @@ object MetricsApi {
             else col("ts") >= lo && col("ts") < date_add(hi, 1))
         case ("portal", "list") =>
           // F4: portal membership via the flattened portalIdentifier[]
-          // dimension, broadcast semi-joined against the fact side
-          // (`metricsreader.py:1449-1453`)
-          val members = IdentifierDim.portalMembers(spark, dir,
-            f.values.map(v => parseLong("portal", v.stripPrefix("portal-"))))
-          df.join(broadcast(members), Seq("user_id"), "left_semi")
+          // dimension's driver index (`metricsreader.py:1449-1453`)
+          df.filter(IdentifierDim.inIds(col("user_id"),
+            IdentifierDim.portalMembers(spark, dir, f.values.map(v =>
+              parseLong("portal", v.stripPrefix("portal-"))))))
         case ("query", "query") =>
           // interpretAs=query: the portal collection-query filter
           // (`metricsreader.py:151-156`) — a field:value boolean expression
@@ -161,18 +171,25 @@ object MetricsApi {
     }
 
     val typeMap = req.metrics.flatMap(m => MetricTypes.get(m).map(_ -> m))
-    val agg = MetricsKernel.pivotCounts(attributed,
-      MetricsKernel.periodOf(col("ts"), unit).as("period") +: dims,
-      col("event_type"), typeMap, lit(1L))
+    val period = MetricsKernel.periodOf(col("ts"), unit).as("period")
 
     // zero-fill over the requested range (only for the plain time series —
-    // extra dims would need a spine × dim-domain cross join)
+    // extra dims would need a spine × dim-domain cross join), folded into
+    // the one aggregation: a spine row's null event_type matches no metric,
+    // so it adds its period with 0 counts. Exact, because the range filter
+    // keeps events within [start, end], whose periods all lie on the spine.
     req.filterBy.find(f => f.interpretAs == "range" &&
       Set("time", "month", "day", "year")(f.filterType)) match {
       case Some(f) if dims.isEmpty =>
-        MetricsKernel.zeroFillSpine(agg, spark, isoDate(f.values.head),
-          isoDate(f.values(1)), unit, req.metrics)
-      case _ => agg
+        val spine = MetricsKernel.periodSpine(spark, isoDate(f.values.head),
+          isoDate(f.values(1)), unit)
+          .select(col("period"), lit(null).cast("string").as("event_type"))
+        MetricsKernel.pivotCounts(
+          attributed.select(period, col("event_type")).unionByName(spine),
+          Seq(col("period")), col("event_type"), typeMap, lit(1L))
+      case _ =>
+        MetricsKernel.pivotCounts(attributed, period +: dims,
+          col("event_type"), typeMap, lit(1L))
     }
   }
 
@@ -192,16 +209,28 @@ object MetricsApi {
     } else v
 
   /** A15 response shape: one row per catalog entity with distinct-event
-    * usage counts per requested metric. */
+    * usage counts per requested metric — per entity and metric type t,
+    * `countDistinct(when(event_type = t, event_id))`, planned in one
+    * exchange: above a single `user_id` repartition, one row per
+    * (entity, event_id) carries a 0/1 flag per metric (1 when some row of
+    * that event_id has type t; never for a null event_id, which
+    * `countDistinct` skips), and the flags are summed per entity. An
+    * entity whose event_ids are all null keeps its row of zeros. */
   private def catalogSummary(events: DataFrame, ids: Seq[String],
                              metrics: Seq[String]): DataFrame = {
-    val aggs = metrics.flatMap(m => MetricTypes.get(m).map { t =>
-      countDistinct(when(col("event_type") === t, col("event_id"))).as(m)
-    })
+    val flags = metrics.map { m =>
+      max(when(col("event_type") === MetricTypes(m) &&
+        col("event_id").isNotNull, 1L).otherwise(0L)).as(m)
+    }
+    val sums = metrics.map(m => sum(col(m)).as(m))
     events.filter(IdentifierDim.inIds(col("user_id"),
         ids.map(parseLong("catalog", _))))
-      .groupBy(col("user_id").as("entity"))
-      .agg(aggs.head, aggs.tail: _*)
+      .repartition(col("user_id"))
+      .groupBy(col("user_id"), col("event_id"))
+      .agg(flags.head, flags.tail: _*)
+      .groupBy(col("user_id"))
+      .agg(sums.head, sums.tail: _*)
+      .withColumnRenamed("user_id", "entity")
   }
 
   def interpretJson(spark: SparkSession, dir: String, json: String): DataFrame =
@@ -241,20 +270,34 @@ object MetricsApi {
 
   /** The reference's column-oriented response shape: one row of parallel
     * arrays ordered by period, plus the `resultDetails` totals
-    * (`metricsreader.py:315-323,1609-1615,1810-1814`). The totals fold the
-    * collected count arrays (null for no period, as `sum` gives), so the
-    * object-hash aggregation holds `collect_list` alone and compiles fewer
-    * projections per request. */
+    * (`metricsreader.py:315-323,1609-1615,1810-1814`), assembled on the
+    * driver as the reference assembles it client-side. Collects `longDf`
+    * (one row per period, so periods × metrics values), orders its rows
+    * as `sort_array` orders structs — Spark's interpreted ordering,
+    * ascending, nulls first, field by field — and returns the response as
+    * a local relation: `periods` array, one array per metric, then
+    * `total_<metric>` bigint per metric, the sum of its non-null counts,
+    * or null when there are none (as `sum` gives). Reading the result runs
+    * no Spark job; the collect here runs `longDf`'s. */
   def columnarResponse(longDf: DataFrame, metrics: Seq[String]): DataFrame = {
-    val ordered = sort_array(collect_list(struct(
-      col("period") +: metrics.map(col): _*))).as("r")
-    val totals = metrics.map { m =>
-      val counts = filter(col(s"r.$m"), _.isNotNull)
-      when(size(counts) > 0,
-        aggregate(counts, lit(0L), (acc, x) => acc + x)).as(s"total_$m")
+    val long = longDf.select(col("period") +: metrics.map(col): _*)
+    val toCatalyst =
+      CatalystTypeConverters.createToCatalystConverter(long.schema)
+    val rows = long.collect()
+      .sortBy(toCatalyst)(TypeUtils.getInterpretedOrdering(long.schema))
+    val arrays = long.schema.fields.indices.map(i => rows.map(_.get(i)).toSeq)
+    val totals = arrays.tail.map { counts =>
+      val present = counts.filter(_ != null)
+      if (present.isEmpty) null
+      else present.map(_.asInstanceOf[Number].longValue).sum
     }
-    val arrays = col("r.period").as("periods") +:
-      (metrics.map(m => col(s"r.$m").as(m)) ++ totals)
-    longDf.agg(ordered).select(arrays: _*)
+    def arrayOf(name: String, f: StructField) =
+      StructField(name, ArrayType(f.dataType, f.nullable), nullable = false)
+    val fields = long.schema.fields.toSeq
+    val schema = StructType(arrayOf("periods", fields.head) +:
+      (fields.tail.map(f => arrayOf(f.name, f)) ++
+        metrics.map(m => StructField(s"total_$m", LongType))))
+    longDf.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(arrays ++ totals)), schema)
   }
 }

@@ -44,34 +44,45 @@ object MetricsKernel {
     case u => throw new IllegalArgumentException(s"unknown unit: $u")
   }
 
-  /** A12: date-spine densification. Generates every period between
-    * `start`/`end` (inclusive, ISO dates) and left-joins the aggregate,
-    * zero-filling missing buckets — replacing the reference's per-month
-    * Python loops (`metricsreader.py:1023-1033,1743-1753`, including their
-    * skipped-partial-month bug, which we correct; SURVEY.md §7.4.6).
-    * The spine is tiny (#periods rows) so the join broadcasts.
+  /** A12: the date spine — one row per period between `start`/`end`
+    * (inclusive, ISO dates), as (period), the engine's one spine builder.
+    * It replaces the reference's per-month Python loops
+    * (`metricsreader.py:1023-1033,1743-1753`), including their
+    * skipped-partial-month bug, which we correct (SURVEY.md §7.4.6): start
+    * is truncated to its unit boundary, since stepping from a mid-unit
+    * start (e.g. Jan 20 monthly) would miss the final period whenever
+    * end's day-of-unit is earlier than start's. So every date in
+    * [start, end] has its period on the spine. Typed columns (never string
+    * interpolation): start/end come from user-controlled request JSON.
+    * One row exploded needs one partition: a default-parallelism range
+    * would schedule a task per core, all but one of them empty.
     */
-  def zeroFillSpine(agg: DataFrame, spark: org.apache.spark.sql.SparkSession,
-                    start: String, end: String, unit: String,
-                    countCols: Seq[String]): DataFrame = {
+  def periodSpine(spark: org.apache.spark.sql.SparkSession, start: String,
+                  end: String, unit: String): DataFrame = {
     val step = unit match {
       case "month" => "interval 1 month"
       case "day"   => "interval 1 day"
       case "year"  => "interval 1 year"
       case u => throw new IllegalArgumentException(s"unknown unit: $u")
     }
-    // start is truncated to its unit boundary: stepping from a mid-unit
-    // start (e.g. Jan 20 monthly) would miss the final period whenever
-    // end's day-of-unit is earlier than start's, silently dropping its
-    // aggregates in the left join. Typed columns (never string
-    // interpolation): start/end come from user-controlled request JSON.
-    // One row exploded needs one partition: a default-parallelism range
-    // would schedule a task per core, all but one of them empty.
-    val spine = spark.range(0, 1, 1, 1).select(explode(sequence(
+    spark.range(0, 1, 1, 1).select(explode(sequence(
       date_trunc(unit, to_date(lit(start))).cast("date"),
       to_date(lit(end)), expr(step))).as("d"))
       .select(periodOf(col("d"), unit).as("period"))
-    val joined = spine.join(agg, Seq("period"), "left")
+  }
+
+  /** A12 for input that is already aggregated: left-joins `agg` to the
+    * [[periodSpine]], zero-filling the periods it lacks. A caller that
+    * still holds the raw rows should instead union the spine rows into
+    * them before its one aggregation (as [[graft.api.MetricsApi]] does),
+    * which needs no join. The spine is tiny (#periods rows) so the join
+    * broadcasts.
+    */
+  def zeroFillSpine(agg: DataFrame, spark: org.apache.spark.sql.SparkSession,
+                    start: String, end: String, unit: String,
+                    countCols: Seq[String]): DataFrame = {
+    val joined = periodSpine(spark, start, end, unit)
+      .join(agg, Seq("period"), "left")
     countCols.foldLeft(joined) { (d, c) =>
       d.withColumn(c, coalesce(col(c), lit(0L)))
     }

@@ -106,39 +106,42 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("In(user_id"))
   }
 
-  test("api dataset/portal filters run as broadcast dim joins, not modulo filters") {
-    // the reference resolves families/portals through a materialized
-    // identifiers dimension; the graded plan must show that join shape —
-    // a BroadcastHashJoin semi-join on user_id — with no modulo stand-in
-    val fam = plan("api_dataset_family")
-    assert(fam.contains("BroadcastHashJoin"), s"no broadcast join:\n$fam")
-    assert(!fam.contains("% 50"), "family filter still a modulo stand-in")
-    val por = plan("api_portal_query")
-    assert(por.contains("BroadcastHashJoin"), s"no broadcast join:\n$por")
-    assert(!por.contains("% 7"), "portal filter still a modulo stand-in")
+  test("api dataset/portal/repository filters are resolved id lists, not modulo filters") {
+    // the reference resolves families, portals and nodes to an id list
+    // through a materialized identifiers dimension and sends one `terms`
+    // filter; the graded plan must show that list — an INSET on user_id
+    // from the dims' driver index — with no modulo stand-in and no join
+    for ((name, modulo) <- Seq("api_dataset_family" -> "% 50",
+        "api_portal_query" -> "% 7", "api_repository_profile" -> "pmod")) {
+      val p = plan(name)
+      assert(p.contains("user_id") && p.contains(" INSET "),
+        s"$name: no resolved id list:\n$p")
+      assert(!p.contains(modulo) && !p.contains("element_at"),
+        s"$name: membership still a modulo stand-in:\n$p")
+      assert(!p.contains("Join"), s"$name: membership still a join:\n$p")
+    }
   }
 
   test("api dataset family: members come from the dim alone, no shuffle join") {
-    // the family expansion reads the checkpointed dim and the request's ids
-    // (exact stats): no runtime bloom filter subquery rescanning the fact
-    // table and no sort-merge join, in the initial or the final plan
+    // the family expansion reads the family dim's driver index: the fact
+    // scan is filtered by the resolved id list, with no runtime bloom
+    // filter subquery rescanning the fact table and no join at all, in the
+    // initial or the final plan
     val df = SparkEntry.queries("api_dataset_family")(spark, testDataDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")
+    assert(p.contains(" INSET "), s"no resolved id list:\n$p")
     assert(!p.contains("bloom_filter_agg"), s"fact-table bloom subquery:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"shuffle join:\n$p")
+    assert(!p.contains("Join"), s"join:\n$p")
   }
 
   test("counter report and api node paths join the broadcast node dim") {
     // node/country attribution is a materialized dimension joined with a
     // BroadcastHashJoin (J6) — the dim build's element_at/pmod formulas are
     // checkpointed away, so the executed query plan must show the join and
-    // no modulo lookup on the fact side
-    // (the requested node NAME may appear as a dim-side filter literal —
-    // what must not appear is the element_at/pmod lookup formula itself)
-    for (name <- Seq("r_counter_flat", "api_repository_profile",
-        "api_user_charts")) {
+    // no modulo lookup on the fact side. (The API's repository filter reads
+    // the node dim's driver index instead: see the resolved-id-list test.)
+    for (name <- Seq("r_counter_flat", "api_user_charts")) {
       val p = plan(name)
       assert(p.contains("BroadcastHashJoin"),
         s"$name: no broadcast dim join:\n$p")

@@ -104,7 +104,7 @@ object Dedup {
     val dup = occ.groupBy(col("h")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2).select(col("h"))
     val perDoc = coverageFold(occ.join(dup, Seq("h"))
-      .select(col("doc_id"), col("pos")), g, sliced = false)
+      .select(col("doc_id"), col("pos")), g)
       .withColumnRenamed("n_dup_starts", "n_dup_grams")
     toks.select(col("doc_id"), col("n_tokens"))
       .join(perDoc, Seq("doc_id"), "left")
@@ -172,14 +172,14 @@ object Dedup {
     * per kept segment (r15: the previous rebuild tested EVERY token
     * against the merged intervals with a per-token `exists`, the
     * documented O(n²/g) worst case on boilerplate-heavy docs; the
-    * complement rebuild is O(n + K), which is what lets a SEGMENTED
-    * 2²⁰-token giant trim at scan speed). Merged chains never touch
+    * complement rebuild is O(n + K), which is what lets a book-length
+    * giant trim at scan speed). Merged chains never touch
     * (es_i < ss_{i+1} strictly, because a gap > g starts a new chain),
     * so the zip of (1 ∷ es) with (ss ∷ n+1) enumerates the kept
     * segments exactly; empty segments (span at position 1 or reaching
     * the end) drop via the s < e filter. `passThrough` names input
     * columns carried verbatim into the output (the quarantine flag on
-    * the suffix-rank path). */
+    * the ExactSubstr trims). */
   private def trimCoveredSpans(withPs: DataFrame, g: Int,
                                passThrough: Seq[String] = Nil,
                                sep: String = " "): DataFrame =
@@ -210,8 +210,8 @@ object Dedup {
   /** Complement-interval rebuild from precomputed maximal merged chain
     * intervals `ss`/`es` (strictly separated: es_i < ss_{i+1}) — the
     * back half of [[trimCoveredSpans]], callable directly by the
-    * suffix-rank path whose per-doc frame now carries interval arrays
-    * instead of raw mark positions (r17). */
+    * ExactSubstr trims, whose per-doc frame carries interval arrays
+    * instead of raw mark positions ([[chainFold]]). */
   private def rebuildFromIntervals(withIv: DataFrame,
                                    passThrough: Seq[String] = Nil,
                                    sep: String = " "): DataFrame =
@@ -229,10 +229,9 @@ object Dedup {
             .stripMargin).as("trimmed_text")) ++ passThrough.map(col): _*)
 
   /** TRUE arbitrary-length ExactSubstr coverage (Lee et al., ACL 2022
-    * §4.1) via DISTRIBUTED PREFIX-DOUBLING SUFFIX RANKS — the r12
-    * stretch: collision-FREE duplicated-span detection for spans of any
+    * §4.1): collision-FREE duplicated-span detection for spans of any
     * length ≥ `minLen`, where [[dupSpanFraction]] is exact only up to
-    * md5 collisions. Two exact facts carry the design:
+    * md5 collisions. Two facts carry the design:
     *
     *  1. COVERAGE EQUIVALENCE. The union of positions covered by
     *     duplicated substrings of ANY length ≥ L equals the union of
@@ -240,56 +239,35 @@ object Dedup {
     *     EVERY offset: a longer duplicated span is tiled by length-L
     *     sub-windows (each itself duplicated), and any duplicated
     *     L-window is already a ≥ L span. Span detection therefore
-    *     needs only an exact "is the L-prefix at position p duplicated
-    *     anywhere in the corpus?" test — no LCP array and no full
-    *     lexicographic suffix order, just suffix-EQUALITY classes.
-    *  2. PREFIX-DOUBLING RANK TEST. After m = ⌊log₂ L⌋ doubling
-    *     rounds, rank classes are exactly 2^m-prefix equality classes,
-    *     and two positions share an L-prefix iff their
-    *     `(rank_m[p], rank_m[p + L − 2^m])` key pairs are equal (the
-    *     classic overlapping-window argument — the two 2^m windows
-    *     tile [p, p+L)). Ranks are EQUALITY REPRESENTATIVES, not
-    *     ordinals: each class is tagged by its minimum
-    *     `doc_id·2²⁰ + pos` member, so a doubling round is
-    *     lead(rank, k) over (doc_id, pos) → groupBy(min) → join(back)
-    *     — two hash shuffles (positions are contiguous per doc, so the
-    *     shifted rank is a window lead, not a self-join — r13), NO
-    *     global sort and no driver-side rank assignment
-    *     (the usual zipWithIndex re-ranking barrier disappears because
-    *     only equality, never order, reaches the final test).
+    *     needs only an exact "is the L-window at position p duplicated
+    *     anywhere in the corpus?" test — no LCP array and no
+    *     lexicographic suffix order, just L-window EQUALITY classes.
+    *  2. FILTER, THEN VERIFY. Every window start gets a rolling
+    *     Karp-Rabin key in O(n) per doc ([[graft.plans.WindowKeysExpr]]).
+    *     Equal windows share a key, so only windows in key buckets of
+    *     ≥ 2 can be duplicated; those candidates fetch their window
+    *     content and regroup on (key, content), which makes the classes
+    *     exact — a key collision between unequal windows never marks
+    *     anything. See [[exactSubstrSpans]] for the exchanges.
     *
-    * Scale: ⌈log₂ minLen⌉ rounds (25 → 4, 200 → 7), each two hash
-    * exchanges over (doc_id, pos, rank) rows — 24 bytes × corpus
-    * tokens, independent of minLen. The md5-gram path ships one
-    * exchange but hashes minLen tokens PER POSITION (O(n·L) compute);
-    * the doubling path wins when L is large or collision-freedom is
-    * contractual, the gram path when L is small — both are priced in
-    * SCALE.md. Suffixes shorter than a window rank with a −1 pad
-    * (the `$`-sentinel convention), which cannot collide with real
-    * representatives (≥ 0).
-    *
-    * Width contract (repr packing `doc_id·2²⁰ + pos`): per-doc token
-    * count < 2²⁰ and doc_id ∈ [0, 2⁴³). Docs past the token width are
-    * QUARANTINED, not aborted on (r13 VERDICT #2 — r13's raise_error
-    * meant one book-length pathological doc killed a multi-hour 100 TB
-    * run): they are diverted out of the rank build entirely — their
-    * content neither marks nor is marked, the `s2_quarantine_split`
-    * ingest discipline — and surface in the output flagged
-    * `quarantined = true` with NULL measures (never a silent
-    * "0 duplication" for an unexamined doc), for offline segmentation
-    * or manual triage. A doc_id outside its range still fails loudly:
-    * that is id-space corruption, not a big document, and no diversion
-    * makes it safe.
+    * Width contract: docs of 2²⁰ tokens or more are QUARANTINED, not
+    * aborted on (one book-length pathological doc must not kill a
+    * multi-hour corpus run): they are diverted out of detection
+    * entirely — their content neither marks nor is marked, the
+    * `s2_quarantine_split` ingest discipline — and surface in the
+    * output flagged `quarantined = true` with NULL measures (never a
+    * silent "0 duplication" for an unexamined doc).
+    * [[exactSubstrCoverageSegmented]] admits books up to ~2³⁰ tokens. A
+    * doc_id outside [0, 2⁴³) still fails loudly: that is id-space
+    * corruption, not a big document.
     *
     * Grain: `"word"` (space-split tokens, the graded default),
     * `"char"` (single-CHARACTER positions — exact, char-addressed), or
-    * `"byte"` (single UTF-8 BYTE positions as hex-pair tokens — the
-    * Lee et al. §4.1 / released-tool addressing; on multi-byte text
-    * this is the grain whose offsets and lengths match the
-    * deduplicate-text-datasets output, closing the r14 char-vs-byte
-    * fidelity epsilon). Char/byte grain multiplies positions ~5-6×
-    * (avg English word+space) for the same doc count; rank_1's
-    * alphabet-sized class dimension broadcasts instead of shuffling.
+    * `"byte"` (single UTF-8 BYTE positions — the Lee et al. §4.1 /
+    * released-tool addressing; on multi-byte text this is the grain
+    * whose offsets and lengths match the deduplicate-text-datasets
+    * output). Char/byte grain multiplies positions ~5-6× (avg English
+    * word+space) for the same doc count.
     *
     * @return one row per doc: (doc_id, n_tokens, n_dup_starts,
     *         covered_tokens, dup_frac_micro, quarantined) —
@@ -297,134 +275,33 @@ object Dedup {
     *         of grams, plus the quarantine flag. */
   def exactSubstrCoverage(df: DataFrame, id: Column, text: Column,
                           minLen: Int = 25,
-                          grain: String = "word"): DataFrame = {
-    val (toks, perDoc) =
-      exactSubstrStarts(df, id, text, minLen, grain = grain,
-        foldCoverage = true)
-    coverageOutput(toks, perDoc)
-  }
+                          grain: String = "word"): DataFrame =
+    exactSubstrSpans(df, id, text, minLen, grain, PlainWidth, trim = false)
 
-  /** [[exactSubstrCoverage]] with OVERLAP SEGMENTATION of over-width
-    * docs (r14 VERDICT #2: quarantine keeps the run alive, but a
-    * ≥ 2²⁰-token book then participates in NO dedup — at 100 TB books
-    * are common and diversion-only leaves real duplication unexamined).
-    * An over-width doc is split into segments of 2²⁰ − 1 tokens at
-    * stride S = 2²⁰ − minLen (consecutive segments overlap by
-    * minLen − 1 tokens), each a synthetic rank-build unit with id
-    * 2⁴² + doc_id·2¹⁰ + k; marks decode back to (orig doc, k·S + pos)
-    * before the per-doc coverage fold.
-    *
-    * EXACTNESS (not an approximation): a length-minLen window starting
-    * at original position p fits wholly inside segment k(p) =
-    * ⌊(p−1)/S⌋ and — because the per-segment window-start ranges
-    * [kS+1, (k+1)S] are consecutive and DISJOINT — inside no other
-    * segment's start range, so physical windows ↔ (segment, local
-    * start) is a bijection: class counts, and therefore the marked
-    * set, equal the hypothetical unsegmented run's exactly. The
-    * minLen−1 overlap is too short to hold a full window, so
-    * segmentation itself manufactures no duplication.
-    *
-    * Contract layers (all per doc, the widest id/width the packings
-    * admit): n < 2²⁰ tokens → direct; otherwise segmented when
-    * doc_id < 2³² and n ≤ 2¹⁰·S + minLen − 1 (≈ 2³⁰ tokens — a
-    * multi-GB single document); past either bound → quarantined
-    * (flagged, NULL measures — the [[exactSubstrCoverage]] contract).
-    * Direct doc ids must sit below 2⁴² (the segment id space); an id
-    * past that fails loudly. Cost: the giant adds its own token count
-    * to the rank build (plus minLen−1 overlap tokens per cut) — the
-    * per-position price is unchanged, and each segment obeys the same
-    * one-window-task skew bound as a max-width doc. */
+  /** [[exactSubstrCoverage]] for corpora that hold book-length docs: the
+    * quarantine width rises from 2²⁰ tokens to
+    * 2¹⁰·(2²⁰ − minLen) + minLen tokens ([[segmentedWidth]];
+    * 1,073,716,249 at minLen 25 — a multi-GB single document), so only a
+    * doc of more than 1,073,716,248 tokens is quarantined. Detection is
+    * the same: the window keys have no width limit, and on a corpus
+    * without docs of 2²⁰ tokens or more the two operators agree row for
+    * row. */
   def exactSubstrCoverageSegmented(df: DataFrame, id: Column,
                                    text: Column, minLen: Int = 25,
-                                   grain: String = "word"): DataFrame = {
-    val (toks, perDoc) =
-      segmentedStarts(df, id, text, minLen, grain, foldCoverage = true)
-    coverageOutput(toks, perDoc)
-  }
+                                   grain: String = "word"): DataFrame =
+    exactSubstrSpans(df, id, text, minLen, grain, segmentedWidth(minLen),
+      trim = false)
 
-  /** [[exactSubstrTrim]] with the [[exactSubstrCoverageSegmented]]
-    * over-width contract: books are TRIMMED, not just measured — the
-    * segmented rank build marks duplicated window starts, the marks
-    * decode back to original positions, and the complement-interval
-    * rebuild in [[trimCoveredSpans]] (O(n + intervals) since r15)
-    * reassembles the giant's survivors at scan speed. Same layered
-    * width contract; only beyond-segmentable docs emit NULL text. */
+  /** [[exactSubstrTrim]] with the [[exactSubstrCoverageSegmented]] width:
+    * books are TRIMMED, not just measured — the complement-interval
+    * rebuild in [[trimCoveredSpans]] (O(n + intervals)) reassembles a
+    * giant's survivors at scan speed. Only docs past the segmented width
+    * emit NULL text. */
   def exactSubstrTrimSegmented(df: DataFrame, id: Column, text: Column,
                                minLen: Int = 25,
-                               grain: String = "word"): DataFrame = {
-    val (toks, perDoc) =
-      segmentedStarts(df, id, text, minLen, grain, foldCoverage = false)
-    quarantineAwareTrim(toks, perDoc, minLen, grain)
-  }
-
-  /** Shared segmentation front half (contract notes on
-    * [[exactSubstrCoverageSegmented]]): classify docs into direct /
-    * segmented / quarantined, run the rank build over direct ∪
-    * segments, and decode marks back to original (doc, pos) before the
-    * per-doc fold. Returns the same (toks, perDoc) pair as
-    * [[exactSubstrStarts]]. For the trim path (`foldCoverage = false`)
-    * a boilerplate-heavy giant's `ps` array is near-token-scale in ONE
-    * checkpointed row (~8 MB at the 2²⁰ width) — the same bound any
-    * max-width doc already has on the plain trim path. */
-  private def segmentedStarts(df: DataFrame, id: Column, text: Column,
-                              minLen: Int, grain: String,
-                              foldCoverage: Boolean,
-                              keepFirst: Boolean = false)
-      : (DataFrame, DataFrame) = {
-    require(minLen >= 2)
-    val S = (1L << 20) - minLen
-    val segLen = (1L << 20) - 1 // = S + minLen - 1
-    val maxSegTokens = (1L << 10) * S + (minLen - 1)
-    val toks = tokenized(df, id, text, grain,
-      widthLimit = maxSegTokens + 1, idLimit = 1L << 42)
-      // the segment id packing 2⁴² + doc_id·2¹⁰ + k admits only
-      // doc_id < 2³² for over-width docs; a wider-id giant stays on
-      // the quarantine contract rather than aliasing segment ids
-      .withColumn("quarantined", col("quarantined") ||
-        (col("n_tokens") >= lit(1L << 20) && col("doc_id") >= lit(1L << 32)))
-    // POSITION-MAPPED segmentation (r16): the old form sliced each
-    // over-width doc's token array per segment (up-to-2^20-element
-    // array COPIES, then a second posexplode) — §2.3's "move heavy
-    // bytes once" applied to array cells. Now every non-quarantined
-    // doc explodes ONCE at original coordinates and each position maps
-    // to its segment(s) arithmetically: direct docs keep (doc, pos);
-    // an over-width doc's position p joins segment k for every k with
-    // kS < p ≤ kS + segLen and k ≤ (n−L) div S — at most TWO rows (the
-    // minLen−1 overlap), bijective with the old slice's (segment,
-    // local start) cells, local pos = p − kS. No giant array is ever
-    // copied, and the explode parallelizes over the doc's positions
-    // instead of serializing per segment row.
-    val exploded = toks.filter(!col("quarantined"))
-      .select(col("doc_id"), col("n_tokens"),
-        posexplode(col("w")).as(Seq("p0", "tok")))
-      .select(col("doc_id"), col("n_tokens"),
-        (col("p0") + 1).cast("long").as("pos"), col("tok"))
-    val direct = exploded.filter(col("n_tokens") < lit(1L << 20))
-      .select(col("doc_id"), col("pos"), col("tok"))
-    val segPos = exploded.filter(col("n_tokens") >= lit(1L << 20))
-      .select(col("doc_id"), col("pos"), col("tok"),
-        explode(expr(
-          s"""sequence(
-             |  CASE WHEN pos <= $segLen THEN 0L
-             |       ELSE (pos - $segLen + $S - 1) div $S END,
-             |  least((pos - 1) div $S, (n_tokens - $minLen) div $S))"""
-            .stripMargin)).as("k"))
-      .select((lit(1L << 42) + col("doc_id") * lit(1L << 10) + col("k"))
-          .as("doc_id"),
-        (col("pos") - col("k") * S).as("pos"), col("tok"))
-    val perDoc = rankPerDoc(direct.unionByName(segPos), minLen,
-      keepFirst = keepFirst, foldCoverage = foldCoverage,
-      sliced = true, // units are near-max-width by construction
-      grain = grain,
-      decode = (d, p) => {
-        val isSeg = d >= lit(1L << 42)
-        (when(isSeg, shiftright(d - lit(1L << 42), 10)).otherwise(d),
-          p + when(isSeg,
-            (d - lit(1L << 42)).bitwiseAND(lit(1023L)) * S)
-            .otherwise(lit(0L)))
-      })
-    (toks, perDoc)
-  }
+                               grain: String = "word"): DataFrame =
+    exactSubstrSpans(df, id, text, minLen, grain, segmentedWidth(minLen),
+      trim = true)
 
   /** TRUE arbitrary-length ExactSubstr TRIM (Lee et al., ACL 2022 §4.1;
     * remove-ALL-copies is what the authors' released
@@ -433,17 +310,15 @@ object Dedup {
     * by corpus-duplicated spans of ANY length ≥ `minLen`, this REMOVES
     * those tokens and rejoins the survivors — [[dupSpanTrim]]'s
     * collision-free twin, with the fixed-gram md5 test replaced by the
-    * prefix-doubling suffix-rank test (same [[exactSubstrStarts]]
-    * machinery, same doubling rounds). By the coverage-equivalence
-    * theorem in [[exactSubstrCoverage]]'s scaladoc the removed set is
-    * exactly the union of all duplicated ≥ minLen-token spans at every
-    * offset, so arbitrary lengths and non-multiple-of-minLen tails trim
-    * exactly; the within-row rebuild is [[trimCoveredSpans]]'s merged-
-    * interval scan (O(n²/g) worst case, documented there). Over-width
-    * docs follow the quarantine contract ([[exactSubstrCoverage]]):
-    * flagged, NULL measures, content untouched by the rank build.
-    * `grain = "char"` is the released tool's actual transform — byte
-    * spans removed, survivors rejoined with NO separator (the
+    * exact window classes of [[exactSubstrSpans]]. By the
+    * coverage-equivalence theorem in [[exactSubstrCoverage]]'s scaladoc
+    * the removed set is exactly the union of all duplicated ≥ minLen-token
+    * spans at every offset, so arbitrary lengths and non-multiple-of-minLen
+    * tails trim exactly; the within-row rebuild is [[trimCoveredSpans]]'s
+    * complement-interval scan. Over-width docs follow the quarantine
+    * contract ([[exactSubstrCoverage]]): flagged, NULL measures, content
+    * untouched by detection. `grain = "char"` / `"byte"` remove character
+    * / byte spans and rejoin the survivors with NO separator (the
     * characters ARE the text); see the coverage scaladoc for the grain
     * contract.
     *
@@ -452,11 +327,8 @@ object Dedup {
     *         the quarantine flag. */
   def exactSubstrTrim(df: DataFrame, id: Column, text: Column,
                       minLen: Int = 25,
-                      grain: String = "word"): DataFrame = {
-    val (toks, perDoc) =
-      exactSubstrStarts(df, id, text, minLen, grain = grain)
-    quarantineAwareTrim(toks, perDoc, minLen, grain)
-  }
+                      grain: String = "word"): DataFrame =
+    exactSubstrSpans(df, id, text, minLen, grain, PlainWidth, trim = true)
 
   /** [[exactSubstrTrim]] with KEEP-ONE-COPY semantics — the variant the
     * paper DISCUSSES (every duplicated span surviving in exactly one
@@ -467,9 +339,8 @@ object Dedup {
     * min is doc-major), a cross-doc duplicated span survives INTACT in
     * the smallest-id doc and trims wholly from the others, and a
     * self-repeated span keeps its first occurrence — clean whole-span
-    * semantics, not ragged window fragments. The winner is decided by
-    * the SAME representative packing the rank classes already use, so
-    * the oracle replays it with a window argmin bit-exactly; remove-all
+    * semantics, not ragged window fragments. The oracle replays the
+    * winner with a window argmin bit-exactly; remove-all
     * ([[exactSubstrTrim]]) remains the conservative default (keep-first
     * retains boilerplate once, which a training corpus may still not
     * want).
@@ -478,50 +349,108 @@ object Dedup {
     *         trimmed_text, quarantined). */
   def exactSubstrTrimKeepFirst(df: DataFrame, id: Column, text: Column,
                                minLen: Int = 25,
-                               grain: String = "word"): DataFrame = {
-    val (toks, perDoc) =
-      exactSubstrStarts(df, id, text, minLen, keepFirst = true,
-        grain = grain)
-    quarantineAwareTrim(toks, perDoc, minLen, grain)
-  }
+                               grain: String = "word"): DataFrame =
+    exactSubstrSpans(df, id, text, minLen, grain, PlainWidth, trim = true,
+      keepFirst = true)
 
   /** [[exactSubstrTrimKeepFirst]] with the [[exactSubstrCoverageSegmented]]
-    * over-width contract (r15 VERDICT #4): books participate in
-    * keep-first trimming too. The winner rule stays the UNSEGMENTED
-    * class argmin — each duplicated window class keeps its minimum
-    * (ORIGINAL doc_id, ORIGINAL pos) occurrence — because the class
-    * argmin is computed over DECODED positions, not synthetic segment
-    * ids (a segment id 2⁴² + doc·2¹⁰ + k sorts after every direct id,
-    * so an argmin over the packed representative would let any small
-    * doc beat any giant regardless of actual doc order; decoding
-    * before the min keeps the rule segment-invariant, and the window ↔
-    * (segment, local start) bijection guarantees each class sees each
-    * physical occurrence exactly once). */
+    * width: books take part in keep-first trimming, and a book wins a
+    * class whenever its (doc_id, pos) is the class minimum. */
   def exactSubstrTrimKeepFirstSegmented(df: DataFrame, id: Column,
                                         text: Column, minLen: Int = 25,
-                                        grain: String = "word"): DataFrame = {
-    val (toks, perDoc) =
-      segmentedStarts(df, id, text, minLen, grain,
-        foldCoverage = false, keepFirst = true)
-    quarantineAwareTrim(toks, perDoc, minLen, grain)
+                                        grain: String = "word"): DataFrame =
+    exactSubstrSpans(df, id, text, minLen, grain, segmentedWidth(minLen),
+      trim = true, keepFirst = true)
+
+  /** Quarantine width of the plain ExactSubstr entry points: docs of
+    * 2²⁰ tokens or more. */
+  private val PlainWidth = 1L << 20
+
+  /** Quarantine width of the `*Segmented` entry points: docs of more than
+    * 2¹⁰·(2²⁰ − minLen) + minLen − 1 tokens, the bound their oracles
+    * pin. */
+  private def segmentedWidth(minLen: Int): Long =
+    (1L << 10) * ((1L << 20) - minLen) + minLen
+
+  /** The one ExactSubstr detection, shared by all six entry points
+    * (design notes on [[exactSubstrCoverage]]). Tokenizes at `grain`,
+    * quarantines docs of `widthLimit` tokens or more, marks every window
+    * start whose `minLen`-window occurs ≥ 2 times in the corpus — with
+    * `keepFirst`, all but each class's minimum (doc_id, pos) occurrence
+    * — and folds the marks per doc into the coverage output or, with
+    * `trim`, the trimmed text.
+    *
+    * Exchanges: ONE on the window key, under both the bucket count and
+    * the join back (an explicit repartition that ReuseExchange shares);
+    * one doc_id exchange per side to fetch the candidates' content; one
+    * (key, content) exchange over the candidates only; then the per-doc
+    * fold. No window function before the fold, no checkpoint, no
+    * global sort.
+    *
+    * `keyMask` narrows the window keys. It exists for tests, which set
+    * it to force key collisions that the (key, content) regroup must
+    * undo. */
+  private[graft] def exactSubstrSpans(df: DataFrame, id: Column, text: Column,
+                                      minLen: Int, grain: String,
+                                      widthLimit: Long, trim: Boolean,
+                                      keepFirst: Boolean = false,
+                                      keyMask: Long = -1L): DataFrame = {
+    require(minLen >= 2)
+    val toks = tokenized(df, id, text, grain, widthLimit)
+    // byte grain keys and compares the UTF-8 binary `b`: the hex-pair
+    // token array `w` then prunes out of coverage plans (only the trim
+    // rebuild reads it)
+    val tokSeq = col(if (grain == "byte") "b" else "w")
+    val eligible = toks.filter(!col("quarantined") && col("n_tokens") >= minLen)
+    val occ = eligible
+      .select(col("doc_id"), posexplode(org.apache.spark.sql.GraftShims.column(
+        graft.plans.WindowKeysExpr(
+          org.apache.spark.sql.GraftShims.expression(tokSeq), minLen)))
+        .as(Seq("p0", "key")))
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
+        col("key").bitwiseAND(keyMask).as("key"))
+      .repartition(col("key"))
+    // a bucket holds ≥ 2 windows iff its (doc_id, pos) occurrences are
+    // not all one. Reading both columns, where a bare count would read
+    // neither, keeps column pruning from giving the bucket count a
+    // narrower child than the join back, so the two share the exchange
+    val multi = occ.groupBy("key")
+      .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"),
+        min(col("pos")).as("p0"), max(col("pos")).as("p1"))
+      .filter(col("d0") < col("d1") || col("p0") < col("p1"))
+    val cand = occ.join(multi.select("key"), "key")
+    // window content: tokens never contain the space they were split
+    // on, and char/byte tokens are single characters/bytes, so equal
+    // content is equal windows
+    val content = grain match {
+      case "word" => s"concat_ws(' ', slice(w, cast(pos AS int), $minLen))"
+      case "char" => s"concat_ws('', slice(w, cast(pos AS int), $minLen))"
+      case _      => s"substring(b, cast(pos AS int), $minLen)"
+    }
+    val occurrence = struct(col("doc_id"), col("pos"))
+    val marks = cand.join(eligible.select(col("doc_id"), tokSeq), "doc_id")
+      .groupBy(col("key"), expr(content).as("content"))
+      .agg(count(lit(1)).as("n"), min(occurrence).as("first"),
+        collect_list(occurrence).as("os"))
+      .filter(col("n") >= 2)
+      .select(col("first"), explode(col("os")).as("o"))
+      .filter(if (keepFirst) col("o") =!= col("first") else lit(true))
+      .select(col("o.doc_id").as("doc_id"), col("o.pos").as("pos"))
+    if (trim) quarantineAwareTrim(toks, chainFold(marks, minLen), grain)
+    else coverageOutput(toks, coverageFold(marks, minLen))
   }
 
-  /** Shared trim tail for the suffix-rank trims: rejoin the marked
-    * positions, run the within-row merged-interval rebuild, and apply
+  /** Shared trim tail for the ExactSubstr trims: rejoin the per-doc
+    * chain intervals, run the complement-interval rebuild, and apply
     * the quarantine contract — a quarantined doc's token array is
-    * replaced by a 1-element placeholder BEFORE the rebuild (so the
-    * giant doc never pays the O(n) membership scan for a result that
-    * is nulled anyway) and its measures emit as NULL. */
+    * already a 1-element placeholder ([[tokenized]]), and its measures
+    * emit as NULL. */
   private def quarantineAwareTrim(toks: DataFrame, perDoc: DataFrame,
-                                  minLen: Int,
-                                  grain: String = "word"): DataFrame = {
+                                  grain: String): DataFrame = {
     val trimmed = rebuildFromIntervals(
-      toks.join(perDoc.select(col("doc_id"), col("ss"), col("es")),
-          Seq("doc_id"), "left")
+      toks.join(perDoc, Seq("doc_id"), "left")
         .withColumn("ss", coalesce(col("ss"), array().cast("array<long>")))
-        .withColumn("es", coalesce(col("es"), array().cast("array<long>")))
-        .withColumn("w", when(col("quarantined"), array(lit("")))
-          .otherwise(col("w"))),
+        .withColumn("es", coalesce(col("es"), array().cast("array<long>"))),
       passThrough = Seq("quarantined"),
       // char/byte-grain docs rejoin WITHOUT a separator (the tokens ARE
       // the characters / hex byte pairs); word grain keeps the
@@ -552,99 +481,41 @@ object Dedup {
         col("quarantined"))
   }
 
-  /** Shared suffix-rank machinery for [[exactSubstrCoverage]] and the
-    * trims (the algorithm notes live on the coverage scaladoc): returns
-    * `(toks, perDoc)` — `toks` one row per doc (doc_id, w, n_tokens,
-    * quarantined); `perDoc` one row per NON-quarantined doc that HAS
-    * trim-marked spans: (doc_id, ss, es) with `ss`/`es` the SORTED
-    * maximal merged chain intervals (r17 — the chain merge runs before
-    * the checkpoint, so the checkpoint pins ≤ n/L interval cells, never
-    * a near-token-scale position array), or — with `foldCoverage`
-    * (the coverage path, which never rebuilds text) —
-    * (doc_id, n_dup_starts, covered): the interval-union fold runs
-    * BEFORE the final localCheckpoint so the checkpoint pins two
-    * scalars per doc, never a near-token-scale `ps` array for
-    * boilerplate-heavy docs (r13 ADVICE). With `keepFirst` each
-    * duplicated class leaves its min-representative occurrence
-    * UNMARKED (adds only a min() to the class agg — no extra
-    * exchange). */
-  private def exactSubstrStarts(df: DataFrame, id: Column, text: Column,
-                                minLen: Int,
-                                keepFirst: Boolean = false,
-                                grain: String = "word",
-                                foldCoverage: Boolean = false): (DataFrame, DataFrame) = {
-    require(minLen >= 2)
-    val toks = tokenized(df, id, text, grain)
-    val positions =
-      if (grain == "byte")
-        // byte positions come straight off the UTF-8 binary (r17):
-        // explode a position sequence and read the byte at pos — the
-        // hex-pair token ARRAY (a regexp over the doubled hex string +
-        // one string cell per byte) never materializes on the rank
-        // path (guide §4 expressions / §2.3 move heavy bytes once);
-        // the trims still read `w` for the within-row rebuild.
-        toks.filter(!col("quarantined") && col("n_tokens") >= 1)
-          .select(col("doc_id"), col("b"),
-            explode(expr("sequence(1L, n_tokens)")).as("pos"))
-          .select(col("doc_id"), col("pos"),
-            expr("substring(b, cast(pos AS int), 1)").as("tok"))
-      else
-        toks.filter(!col("quarantined"))
-          .select(col("doc_id"), posexplode(col("w")).as(Seq("p0", "tok")))
-          .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
-            col("tok"))
-    val perDoc = rankPerDoc(positions, minLen, keepFirst, foldCoverage,
-      grain = grain)
-    (toks, perDoc)
-  }
-
-  /** Grain tokenizer shared by the suffix-rank family: one row per doc
-    * (doc_id, w, n_tokens, quarantined), with the doc_id range guard and
-    * the width/quarantine contract applied. The quarantine decision
-    * SHORT-CIRCUITS on the raw text length for char/byte grains (r14
-    * ADVICE: the old per-char `transform(sequence, substring)` rescanned
-    * the UTF8String per element — O(n²) per doc — and materialized the
-    * array even for docs headed to quarantine; a quarantined doc's array
-    * is now a 1-element placeholder, and the splits below are single
-    * linear regex passes). Grains:
+  /** Grain tokenizer shared by the ExactSubstr family: one row per doc
+    * (doc_id, w, n_tokens, quarantined, plus `b` at byte grain), with
+    * the doc_id range guard and the width/quarantine contract applied.
+    * The quarantine decision SHORT-CIRCUITS on the raw text length for
+    * char/byte grains: a quarantined doc's array is a 1-element
+    * placeholder, and the splits below are single linear regex passes.
+    * Grains:
     *  - `"word"`: space-split tokens (the graded default).
     *  - `"char"`: one element per CHARACTER (code point) via the
     *    zero-width split — char-ADDRESSED positions; `n_tokens` counts
     *    characters.
     *  - `"byte"`: one element per UTF-8 BYTE, each encoded as its
-    *    2-nibble hex pair (a bijection byte ↔ token, so rank equality
-    *    IS byte equality) — the released Lee et al. tool's actual
-    *    addressing (r14 VERDICT #3 closed): `n_tokens` and positions
+    *    2-nibble hex pair (a bijection byte ↔ token) — the released
+    *    Lee et al. tool's actual addressing: `n_tokens` and positions
     *    count BYTES, so on multi-byte text this grain matches the
     *    deduplicate-text-datasets offsets where `"char"` diverges by
-    *    the encoding width. Trim rejoins decode the surviving hex pairs
-    *    back through unhex ([[quarantineAwareTrim]]).
+    *    the encoding width. The raw binary rides along as `b`. Trim
+    *    rejoins decode the surviving hex pairs back through unhex
+    *    ([[quarantineAwareTrim]]).
     */
   private def tokenized(df: DataFrame, id: Column, text: Column,
                         grain: String,
-                        widthLimit: Long = 1L << 20,
-                        idLimit: Long = 1L << 43): DataFrame = {
-    // doc_id range guard (r13 ADVICE): an id outside [0, idLimit) would
-    // silently alias the doc_id·2²⁰+pos representative packing (or the
-    // segmented path's 2⁴²+doc_id·2¹⁰+k segment ids) and merge rank
-    // classes across unrelated docs. Unlike the token width (a property
-    // of legitimate big documents — quarantined below), an out-of-range
-    // id is upstream corruption: fail loudly, one codegen'd branch per
-    // DOC row.
-    val idBits = java.lang.Long.numberOfTrailingZeros(idLimit)
-    val guarded = when(id >= 0 && id < lit(idLimit), id)
+                        widthLimit: Long = PlainWidth): DataFrame = {
+    // doc_id range guard: ids are validated as [0, 2⁴³) at the door. An
+    // out-of-range id is upstream corruption, not a property of a
+    // legitimate document: fail loudly, one codegen'd branch per DOC row
+    val guarded = when(id >= 0 && id < lit(1L << 43), id)
       .otherwise(raise_error(concat(
-        lit("exactSubstr: doc_id "), id,
-        lit(s" outside [0, 2^$idBits) — repr packing would alias")))
+        lit("exactSubstr: doc_id "), id, lit(" outside [0, 2^43)")))
         .cast("long")).as("doc_id")
-    // token-width contract: pos < widthLimit must hold for the packing.
-    // A doc at/after the width is QUARANTINED — excluded from the rank
-    // build (so pos never reaches the width by construction), its token
-    // array replaced by a 1-element placeholder (content never shipped),
-    // and flagged for the caller's NULL-measure output — instead of the
-    // r13 raise_error that let one pathological doc abort a corpus run
-    // (r13 VERDICT #2, the s2_quarantine_split discipline). For books
-    // that should still participate, see [[exactSubstrCoverageSegmented]].
+    // width contract: a doc at/after `widthLimit` tokens is QUARANTINED —
+    // excluded from detection, its token array replaced by a 1-element
+    // placeholder (content never shipped), and flagged for the caller's
+    // NULL-measure output, so one pathological doc cannot abort a corpus
+    // run (the s2_quarantine_split discipline)
     val pre = grain match {
       case "word" =>
         df.select(guarded, split(text, " ").as("__w"))
@@ -653,8 +524,7 @@ object Dedup {
       case "char" =>
         // one element per character: the zero-width split is a single
         // linear pass and yields exactly length(__t) elements (no
-        // leading/trailing empties; astral code points stay whole —
-        // probed against the old transform/substring formulation)
+        // leading/trailing empties; astral code points stay whole)
         df.select(guarded, text.cast("string").as("__t"))
           .select(col("doc_id"), split(col("__t"), "").as("__w"),
             length(col("__t")).cast("long").as("n_tokens"))
@@ -663,10 +533,9 @@ object Dedup {
         // binary once, then one linear regexp pass inserts a separator
         // after every pair (',' never occurs in the hex alphabet); the
         // slice drops the trailing empty element the final ',' leaves.
-        // The raw binary rides along as `b` (r17): the rank build reads
-        // bytes off it directly and never consumes `w`, whose
-        // regexp_replace + split + per-byte string cells then PRUNE out
-        // of coverage plans entirely (only the trim rebuild pays them).
+        // Detection reads the raw binary `b` and never consumes `w`,
+        // whose regexp_replace + split + per-byte string cells then
+        // PRUNE out of coverage plans entirely.
         df.select(guarded, encode(text.cast("string"), "UTF-8").as("__b"))
           .select(col("doc_id"),
             expr("""slice(split(regexp_replace(hex(__b), '(..)', '$1,'),
@@ -685,448 +554,36 @@ object Dedup {
       .select(outCols: _*)
   }
 
-  /** Rank-build core shared by [[exactSubstrStarts]] and
-    * [[exactSubstrCoverageSegmented]]: input is one row per POSITION of
-    * a rank-build unit (a doc, or a segment of an over-width doc) —
-    * (doc_id, pos, tok) with positions contiguous 1..n per unit, every
-    * unit under the 2²⁰-position packing width and doc_id already
-    * guarded (r16: callers explode; the old per-unit (doc_id, w) input
-    * forced the core to re-tokenize per consumer). Runs the widening
-    * stages, marks duplicated window starts, applies `decode` (the
-    * segmented path's synthetic-id → (orig doc, orig pos) unpack —
-    * identity for plain docs) BEFORE the per-doc fold, and returns the
-    * checkpointed per-doc frame: (doc_id, ss, es) or — with
-    * `foldCoverage` — (doc_id, n_dup_starts, covered). The checkpoint
-    * discipline (notes in the body) lives here so the rank table's
-    * blocks release exactly once per build. */
-  private def rankPerDoc(positions: DataFrame, minLen: Int,
-                         keepFirst: Boolean, foldCoverage: Boolean,
-                         decode: (Column, Column) => (Column, Column) =
-                           (d, p) => (d, p),
-                         sliced: Boolean = false,
-                         grain: String = "word")
-      : DataFrame = {
-    val repr = col("doc_id") * (1L << 20) + col("pos")
-    // Initial rank: any INJECTIVE non-negative class id works — the
-    // doubling/widening algebra and the final dup-class key only ever
-    // consult rank EQUALITY, never rank values (the keep-first argmin
-    // reads the starts' own decoded coordinates, not ranks). r16:
-    //  - word grain keeps the min-representative groupBy (unbounded
-    //    vocabulary — a collision-free id needs the class exchange);
-    //  - char/byte grains take the token's UTF-8 bytes AS the rank
-    //    (conv(hex(bytes)) < 2^32 — UTF-8 is an injective encoding).
-    //    Injectivity assumes WELL-FORMED UTF-16 input (r16 ADVICE): a
-    //    lone surrogate char encodes to the replacement byte 0x3F and
-    //    collides with a literal '?', where the old token-string groupBy
-    //    kept them in separate classes — malformed docs can acquire
-    //    extra duplicate marks. Corpus text here is well-formed by the
-    //    loaders' decode; callers feeding raw fused binary must
-    //    normalize unpaired surrogates first.
-    //    The byte mapping is a pure map that deletes the rank_1 exchange + join outright
-    //    (guide §2.4), and byte grain then PACKS 7 consecutive byte
-    //    ranks into one long (base-257 with pad 256 — a real byte is
-    //    ≤ 255, so short suffixes stay distinct) in the same window
-    //    pass: rank_7 with zero class exchanges.
-    // Checkpoint discipline (r16): ONLY where a frame is read twice.
-    // The SLICED path's carry union reads its rank input twice per
-    // window pass, so every sliced stage checkpoints eagerly (the
-    // resolveRoots/pageRank discipline — also bounds the r13 3^rounds
-    // lineage blowup). The PLAIN path reads each stage's output exactly
-    // once (the widen stage's two internal consumers share the explicit
-    // repartition via ReuseExchange), so the whole build runs as ONE
-    // un-barriered DAG: no per-stage materialization job, no stranded
-    // blocks — only the word-grain rank_1 keeps its checkpoint (its
-    // self-join scans `positions` twice, and re-running tokenize+explode
-    // per scan is the greater cost). Consecutive plain windows over the
-    // same (doc_id)-partitioning also collapse to one exchange + sort
-    // (the byte-grain pack window feeds the final-key window directly).
-    var k = 1L
-    var lastCp: Option[DataFrame] = None
-    def staged(df: DataFrame): DataFrame =
-      if (!sliced) df
-      else {
-        val c = df.localCheckpoint()
-        lastCp.foreach(graft.operators.Joins.unpersistLocalCheckpoint)
-        lastCp = Some(c)
-        c
-      }
-    var r = grain match {
-      case "word" =>
-        // explicit tok repartition (r16, the widenStage discipline):
-        // without it the class-map groupBy and the join probe each
-        // scan `positions` separately — tokenize + slice + posexplode
-        // run TWICE per build (measured ~0.8 s of the segmented
-        // entry's rank_1). One exchange, shared by both consumers via
-        // ReuseExchange; skew behavior of the tok join is unchanged.
-        val posP = positions.repartition(col("tok"))
-        val r1 = posP.join(
-          posP.groupBy("tok").agg(min(repr).as("rank")), "tok")
-          .select(col("doc_id"), col("pos"), col("rank"))
-          .localCheckpoint()
-        lastCp = Some(r1)
-        r1
-      case "char" | "byte" =>
-        // byte grain: the token is the raw 1-byte BINARY on the plain
-        // path (r17 — read off the UTF-8 buffer, no hex-pair array) or
-        // a 2-nibble hex pair on the segmented path; both hex-decode
-        // to the byte value 0..255. char grain: the token's UTF-8
-        // bytes as a number (≤ 4 bytes → < 2^32; UTF-8 is injective).
-        val tokIsBinary = positions.schema("tok").dataType ==
-          org.apache.spark.sql.types.BinaryType
-        val byteRank = positions.select(col("doc_id"), col("pos"),
-          (if (grain == "byte" && tokIsBinary) conv(hex(col("tok")), 16, 10)
-           else if (grain == "byte") conv(col("tok"), 16, 10)
-           else conv(hex(encode(col("tok"), "UTF-8")), 16, 10))
-            .cast("long").as("rank"))
-        if (grain == "byte" && minLen >= 8) {
-          // pack 7 byte ranks (each ≤ 255, pad 256) into one long:
-          // 257^7 < 2^63 — one window pass, no class exchange
-          k = 7L
-          staged(multiShiftedRank(byteRank, (1 to 6), sliced = sliced)
-            .select(col("doc_id"), col("pos"),
-              (2 to 7).map(i => coalesce(col(s"r$i"), lit(256L)))
-                .foldLeft(col("r1")) { (acc, b) =>
-                  acc * 257L + b
-                }.as("rank")))
-        } else staged(byteRank)
-      case other => throw new IllegalArgumentException(
-        s"grain must be word|char|byte, got $other")
-    }
-    // WIDENING stages (r16, guide §1.2/§2.4 — fix the distributed
-    // algorithm first): where a doubling round extends rank width k to
-    // 2k with ONE window lead + ONE class exchange, a widening stage
-    // extends k to j·k with j−1 leads IN THE SAME window pass + the
-    // same single class exchange over the j-column key — equality of
-    // (rank_k[p], rank_k[p+k], …, rank_k[p+(j−1)k]) is equality of the
-    // j·k-prefix by the standard tiling argument, with the −1 pad
-    // keeping short suffixes distinct exactly as in the doubling form.
-    // ⌊log₂L⌋ barriered rounds collapse to ⌈log_j L⌉ ≈ 2 stages
-    // (L=25: one j=5 stage; L=200: j=8 then j=5), and the final
-    // L-prefix test needs no power-of-two k at all: the key is the
-    // ⌈L/k⌉-tuple of rank_k at stride-k offsets clamped to L−k (the
-    // same overlapping-window tiling, generalized from 2 windows to
-    // ⌈L/k⌉). Same collision-free classes, ~half the exchanges and
-    // checkpoint barriers; per-stage shuffle rows unchanged (the key
-    // widens to j longs — still far under the old per-round total).
-    // Positions are CONTIGUOUS 1..n per doc by construction, so every
-    // shifted rank is a window lead, never a self-join (r13); with
-    // `sliced` (the SEGMENTED path) the leads compute per 2^16-slice
-    // with a maxOffset-row boundary carry ([[multiShiftedRank]]).
-    while (math.ceil(minLen.toDouble / k) > 8) {
-      val j0 = math.ceil(math.sqrt(minLen.toDouble / k)).toInt
-      val j = math.max(2, math.min(8, math.min(j0, (minLen / k).toInt)))
-      r = staged(widenStage(r, k, j, sliced))
-      k *= j
-    }
-    // Final L-prefix equality key at p: rank_k at offsets 0, k, 2k, …
-    // clamped to L−k — consecutive offsets differ ≤ k so the k-windows
-    // tile [p, p+L) exactly (the classic 2-window overlap argument,
-    // generalized). k == L degenerates to the single-rank key.
-    val offs = ((k to (minLen - k) by k) ++ Seq(minLen - k))
-      .distinct.filter(_ > 0).map(_.toInt)
-    val keyCols = "r1" +: offs.indices.map(i => s"r${i + 2}")
-    // GUARD lead (r16): p starts a full L-window iff position p+L−1
-    // exists, i.e. iff the lead at offset L−1 is non-null — computed in
-    // the SAME window pass as the key leads, which deletes the old
-    // (keys ⋈ n_tokens)-dimension join and with it one full
-    // re-tokenize pass over the corpus (the n_tokens projection could
-    // not avoid re-running split/slice — §2.3 "project before the
-    // exchange" applied to the scan itself). The guard's rank value
-    // never joins the key: its k-window would poke past [p, p+L).
-    // Guard non-null ⟹ every smaller key offset is non-null too.
-    val guardOff = minLen - 1
-    val allOffs = if (offs.nonEmpty && offs.last == guardOff) offs
-                  else offs :+ guardOff
-    val guardCol = s"r${allOffs.length + 1}"
-    // The two consumers of `starts` (class-count groupBy + join probe)
-    // each re-run the final window's sort+window above a REUSED
-    // (doc_id, s) exchange. An explicit class-key repartition shared
-    // via ReuseExchange (the widenStage discipline) was TRIED in r17
-    // and measured 1.12-1.31x WORSE across the family (isolated
-    // controlled runs, plans/r17/ISOLATED_family_*): the extra
-    // full-row exchange costs more than the duplicated partition-local
-    // sort+window it saves. Kept as the two-branch shape deliberately.
-    val starts = multiShiftedRank(r, allOffs, sliced = sliced)
-      .filter(col(guardCol).isNotNull)
-    // the winner/mark coordinates are the DECODED (original doc,
-    // original pos) — identity for plain docs; the segmented path's
-    // synthetic-id unpack otherwise. The keep-first argmin MUST use
-    // decoded coordinates (r15 VERDICT #4): synthetic segment ids sort
-    // after every direct id, so a packed-representative argmin would
-    // pick winners by segment-id order, not the contract's doc-major
-    // original order.
-    val (odoc, opos) = decode(col("doc_id"), col("pos"))
-    val drep = struct(odoc.as("d"), opos.as("p"))
-    val dupClasses = starts.groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("n"),
-        (if (keepFirst) min(drep) else min(repr)).as("mn"))
-      .filter(col("n") >= 2)
-    // keep-first: the class's min-representative occurrence survives —
-    // a map-side filter above the same class join, no extra exchange
-    val marked =
-      if (keepFirst)
-        starts.join(dupClasses.select((keyCols :+ "mn").map(col): _*),
-            keyCols)
-          .filter(drep =!= col("mn"))
-      else starts.join(dupClasses.select(keyCols.map(col): _*), keyCols)
-    // reduce to DOC-grain before releasing the rank table: the final
-    // checkpoint pins one small row per doc, not corpus-token-sized
-    // rank blocks — 7 bench reps of the sf1 corpus would otherwise
-    // strand ~1.7 GB of executor storage and inflate every later
-    // in-set entry (the stage-cache lesson, PipelineQueries).
-    val markedPos = marked.select(odoc.as("doc_id"), opos.as("pos"))
-    val perDoc =
-      (if (foldCoverage) coverageFold(markedPos, minLen, sliced)
-       else chainFold(markedPos, minLen, sliced)).localCheckpoint()
-    lastCp.foreach(graft.operators.Joins.unpersistLocalCheckpoint)
-    perDoc
-  }
-
   /** Per-doc coverage fold over marked window starts (doc_id, pos):
-    * (doc_id, n_dup_starts, covered) with covered = |union of
-    * [p, p+L)|. Package-private for the equivalence spec; `b` (the
-    * slice width of the sliced form) is overridable for tests only. */
-  private[graft] def coverageFold(markedPos: DataFrame, minLen: Int,
-                                  sliced: Boolean,
-                                  b: Long = 1L << 16): DataFrame = {
+    * (doc_id, n_dup_starts, covered) with covered = |union of [p, p+L)|,
+    * as a RUNNING-MAX WINDOW + sum: adds(p) = max(0, p+L − max(reach, p))
+    * with reach = max(p'+L) over the doc's earlier marks — all integer,
+    * fully codegen'd, and the oracle replays it with the same window
+    * formulation. The window's doc_id hash doubles as the groupBy
+    * distribution — one exchange. */
+  private def coverageFold(markedPos: DataFrame, minLen: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val B = b
-    if (!sliced) {
-        // coverage interval-union as a RUNNING-MAX WINDOW + sum (r16):
-        // adds(p) = max(0, p+L − max(reach, p)) with reach = max(p'+L)
-        // over the doc's earlier marks — the same recurrence the old
-        // collect_list → sort_array → aggregate() fold computed, but
-        // fully codegen'd (§4/§1.2: the interpreted higher-order fold
-        // allocated a struct per element). The window's doc_id hash
-        // doubles as the groupBy distribution — one exchange.
-        val byDoc = Window
-          .partitionBy(col("doc_id")).orderBy(col("pos"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        markedPos
-          .withColumn("adds", greatest(lit(0L),
-            col("pos") + minLen - greatest(
-              coalesce(max(col("pos") + minLen).over(byDoc), lit(0L)),
-              col("pos"))))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_dup_starts"),
-            sum(col("adds")).as("covered"))
-      } else {
-        // SLICED two-level coverage fold (r17, guide §2.1/§2.5): the
-        // whole-doc window put a segmented giant's ~1M marks in ONE
-        // window task (single-task sort no core count can shrink).
-        // Level 1 runs the same running-max recurrence per
-        // (doc_id, slice) — parallel, ≤ B rows per task — and reduces
-        // each slice to 4 scalars; level 2 stitches slices with the
-        // EXACT incoming-reach correction: earlier slices' reach is
-        // R = max(pos)+L over all earlier marks, R < minp + L (earlier
-        // positions < this slice's min), and the slice's own union
-        // contains [minp, minp+L) in full, so the double-counted
-        // overlap is exactly max(0, R − minp). Integer-exact, same
-        // values as the one-window fold (OperatorsSpec pins the
-        // equivalence); the doc-grain exchange now carries slice rows,
-        // not mark rows.
-        val wSlicePrev = Window
-          .partitionBy(col("doc_id"), col("s")).orderBy(col("pos"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val wDocPrev = Window
-          .partitionBy(col("doc_id")).orderBy(col("s"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        markedPos
-          .withColumn("s", expr(s"(pos - 1) div $B"))
-          .withColumn("adds", greatest(lit(0L),
-            col("pos") + minLen - greatest(
-              coalesce(max(col("pos") + minLen).over(wSlicePrev), lit(0L)),
-              col("pos"))))
-          .groupBy(col("doc_id"), col("s"))
-          .agg(count(lit(1)).as("cnt"), sum(col("adds")).as("cov0"),
-            min(col("pos")).as("minp"), max(col("pos")).as("maxp"))
-          .withColumn("pm", max(col("maxp")).over(wDocPrev))
-          .withColumn("cov", when(col("pm").isNull, col("cov0"))
-            .otherwise(col("cov0") - greatest(lit(0L),
-              col("pm") + minLen - col("minp"))))
-          .groupBy(col("doc_id"))
-          .agg(sum(col("cnt")).as("n_dup_starts"),
-            sum(col("cov")).as("covered"))
-      }
+    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    markedPos
+      .withColumn("adds", greatest(lit(0L),
+        col("pos") + minLen - greatest(
+          coalesce(max(col("pos") + minLen).over(byDoc), lit(0L)),
+          col("pos"))))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_dup_starts"),
+        sum(col("adds")).as("covered"))
   }
 
   /** Per-doc maximal merged chain intervals from marked starts:
-    * (doc_id, ss, es) — the trim contract. Package-private for the
-    * equivalence spec; `b` is the sliced form's slice width,
-    * overridable for tests only. */
-  private[graft] def chainFold(markedPos: DataFrame, minLen: Int,
-                               sliced: Boolean,
-                               b: Long = 1L << 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val B = b
-    if (!sliced) {
-      // plain trim marks: per-doc sorted position array, then the
-      // within-row chain merge (r17: the merge moved BEFORE the
-      // checkpoint — the checkpoint pins interval arrays, ≤ n/L
-      // elements, never a near-token-scale ps array).
-      intervalsFromPs(
-        markedPos.groupBy(col("doc_id"))
-          .agg(sort_array(collect_list(col("pos"))).as("ps")), minLen)
-        .select(col("doc_id"), col("ss"), col("es"))
-    } else {
-      // SLICED distributed chain compression (r17, VERDICT r16 #1):
-      // the old fold collected a segmented giant's ~1M mark positions
-      // into ONE row's array and merged chains interpretively inside
-      // it. Chains (runs of starts with gap ≤ L — trimCoveredSpans'
-      // merge rule) are detected per (doc_id, slice) window task,
-      // reduced to (first start, last start) scalars, then re-merged
-      // across slice boundaries at chain grain with the SAME gap rule
-      // (a boundary cut only ever splits a chain; re-merging on
-      // cs − lag(lp) ≤ L restores the maximal chains exactly — the
-      // condition is consecutive-start gap, which slicing preserves).
-      // The giant's marks collapse to ~1 interval; no ~1M-element
-      // single-row array exists anywhere in the plan.
-      val wSlice = Window
-        .partitionBy(col("doc_id"), col("s")).orderBy(col("pos"))
-      val prevPos = lag(col("pos"), 1).over(wSlice)
-      val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("cs"))
-      val prevLp = lag(col("lp"), 1).over(wDoc)
-      markedPos
-        .withColumn("s", expr(s"(pos - 1) div $B"))
-        .withColumn("h", when(prevPos.isNull ||
-          col("pos") - prevPos > minLen, 1L).otherwise(0L))
-        .withColumn("cid", sum(col("h")).over(wSlice))
-        .groupBy(col("doc_id"), col("s"), col("cid"))
-        .agg(min(col("pos")).as("cs"), max(col("pos")).as("lp"))
-        .withColumn("h", when(prevLp.isNull ||
-          col("cs") - prevLp > minLen, 1L).otherwise(0L))
-        .withColumn("mid", sum(col("h")).over(wDoc))
-        .groupBy(col("doc_id"), col("mid"))
-        .agg(min(col("cs")).as("cs"), max(col("lp")).as("lp"))
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(struct(col("cs"), col("lp"))))
-          .as("cv"))
-        .select(col("doc_id"),
-          expr("transform(cv, x -> x.cs)").as("ss"),
-          expr(s"transform(cv, x -> x.lp + $minLen)").as("es"))
-    }
-  }
-
-  /** ONE prefix-doubling round over a rank table (doc_id, pos, rank):
-    * fetch rank[pos + k] as a window lead (positions are contiguous
-    * 1..n per doc — the r13 rewrite that retired the r12 shift
-    * self-join), pad suffix ends with −1, and re-tag each (r1, r2)
-    * class with its min representative.
-    *
-    * EXCHANGE BUDGET — exactly TWO shuffle exchanges per round, pinned
-    * by PlanSpec: the window's doc_id hash and ONE explicit (r1, r2)
-    * repartition that ReuseExchange shares between the class-map
-    * groupBy and the join probe (the [[winnowCandidatePairs]]
-    * one-exchange-three-consumers discipline). Extracting the r14 pin
-    * spec exposed that the r13 shape actually EXECUTED three: letting
-    * the planner insert ENSURE_REQUIREMENTS exchanges gave the groupBy
-    * and the join each their own (r1, r2) shuffle — textually
-    * different children (partial agg vs raw projection), so
-    * ReuseExchange could not merge them — and re-ran the window + its
-    * doc_id sort once per consumer. The explicit repartition trades
-    * the class map's map-side partial min (tiny — class-count rows)
-    * for shipping `paired` ONCE and computing the window ONCE.
-    * Package-private for the spec; [[exactSubstrStarts]] is the only
-    * production caller. */
-  private[graft] def doublingRound(r: DataFrame, k: Int,
-                                   sliced: Boolean = false): DataFrame =
-    widenStage(r, k, 2, sliced)
-
-  /** ONE widening stage (r16 generalization of [[doublingRound]]):
-    * extend rank width k to j·k with the j−1 leads k, 2k, …, (j−1)k
-    * computed in a single window pass, then re-tag each j-tuple class
-    * with its min representative. j = 2 IS the classic doubling round;
-    * larger j trades a wider (j-long) class key for ⌈log_j⌉ instead of
-    * ⌈log₂⌉ stages — at corpus scale the per-stage barrier + two
-    * exchanges dominate the extra key bytes, so fewer stages win
-    * (measured in OPTIMIZATION_r16.md). Exchange budget per stage is
-    * UNCHANGED from the doubling round: the window's hash + ONE
-    * explicit j-column repartition that ReuseExchange shares between
-    * the class-map groupBy and the join probe. */
-  private[graft] def widenStage(r: DataFrame, k: Long, j: Int,
-                                sliced: Boolean = false): DataFrame = {
-    require(j >= 2)
-    val repr = col("doc_id") * (1L << 20) + col("pos")
-    val offs = (1 until j).map(i => (i * k).toInt)
-    val keyCols = (1 to j).map(i => s"r$i")
-    // ranks of the suffixes k, 2k, … ahead; missing (suffix ends) pad
-    // with -1 — a real representative is ≥ 0, so short suffixes stay
-    // distinct from every full window
-    val shifted = multiShiftedRank(r, offs, sliced = sliced)
-    val paired = keyCols.tail
-      .foldLeft(shifted)((df, c) =>
-        df.withColumn(c, coalesce(col(c), lit(-1L))))
-      .repartition(keyCols.map(col): _*)
-    val rmap = paired.groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(min(repr).as("rank"))
-    paired.join(rmap, keyCols)
-      .select(col("doc_id"), col("pos"), col("rank"))
-  }
-
-  /** rank[pos + k] for every position, as a SLICED window lead (r15
-    * VERDICT #8): the whole-doc `lead(rank, k) OVER (PARTITION BY
-    * doc_id ORDER BY pos)` puts each rank-build unit in ONE window
-    * task — for a segmented giant that is two ~1M-row single-task
-    * sorts per doubling round, a ≈9 s/giant fixed cost at sf0.1 that
-    * no executor count can shrink. Instead the window partitions by
-    * (doc_id, slice) with slice = (pos−1) div B, and the first k rows
-    * of each following slice are UNIONED in as boundary-carry rows:
-    * positions inside every augmented partition remain contiguous
-    * (sliceStart+1 .. sliceEnd+k), so `lead(rank, k)` resolves to
-    * rank[pos+k] exactly as in the whole-doc window — the two-level
-    * carry discipline of `Layout.compactionPlan` — while a 2^20-row
-    * unit spreads over 2^20/B ≈ 16 tasks. Carry rows are dropped after
-    * the lead (their home slice computes their value); a doc's true
-    * suffix end still reads null (its last slice has no carry to
-    * borrow). Requires k < B — k ≤ 2^⌊log₂ minLen⌋ ≤ 2^19 by the
-    * packing width, and callers' minLen is ≤ a few hundred. Spec-pinned
-    * slice ≡ whole-window at B = 8 (dense carries on tiny docs).
-    * Skew bound: one window task is ≤ B + k rows, unit-independent.
-    * Exchange budget unchanged: the union feeds ONE (doc_id, s) hash
-    * exchange. `b` is overridable for the spec only. */
-  private[graft] def shiftedRank(r: DataFrame, k: Int,
-                                 b: Long = 1L << 16,
-                                 sliced: Boolean = true): DataFrame =
-    multiShiftedRank(r, Seq(k), b, sliced)
-
-  /** Multi-offset generalization of [[shiftedRank]] (r16): rank[pos+o]
-    * for EVERY offset o in `offsets`, all as leads over ONE window pass
-    * (same window spec → Spark plans a single Window operator + one
-    * exchange/sort, however many offsets). Output columns r1 (the rank
-    * at pos) then r2…r{n+1} in `offsets` order. The sliced variant
-    * carries max(offsets) boundary rows per slice — the single-offset
-    * carry discipline, widened to the largest lead. */
-  private[graft] def multiShiftedRank(r: DataFrame, offsets: Seq[Int],
-                                      b: Long = 1L << 16,
-                                      sliced: Boolean = true): DataFrame = {
-    require(offsets.nonEmpty && offsets.forall(_ >= 1))
-    def leads(w: org.apache.spark.sql.expressions.WindowSpec) =
-      offsets.zipWithIndex.map { case (o, i) =>
-        lead(col("rank"), o).over(w).as(s"r${i + 2}")
-      }
-    if (!sliced) {
-      // plain path: whole-doc window — one task per doc, bounded by the
-      // 2^20 width contract; no carry union, no second rank-table scan
-      val byDoc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("pos"))
-      return r.select(
-        Seq(col("doc_id"), col("pos"), col("rank").as("r1")) ++
-          leads(byDoc): _*)
-    }
-    val maxOff = offsets.max
-    require(maxOff < b,
-      s"carry width maxOff=$maxOff must stay under the slice size $b")
-    val main = r.withColumn("s", expr(s"(pos - 1) div $b"))
-    val carry = r.filter(expr(s"pos > $b AND (pos - 1) % $b < $maxOff"))
-      .withColumn("s", expr(s"((pos - 1) div $b) - 1"))
-    val bySlice = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"), col("s")).orderBy(col("pos"))
-    main.unionByName(carry)
-      .select(Seq(col("doc_id"), col("pos"), col("s"),
-        col("rank").as("r1")) ++ leads(bySlice): _*)
-      .filter(col("s") === expr(s"(pos - 1) div $b"))
-      .drop("s")
-  }
+    * (doc_id, ss, es) — the trim contract. The per-doc sorted position
+    * array is merged within the row, so the frame carries interval
+    * arrays (≤ n/L elements), never a near-token-scale position array. */
+  private def chainFold(markedPos: DataFrame, minLen: Int): DataFrame =
+    intervalsFromPs(
+      markedPos.groupBy(col("doc_id"))
+        .agg(sort_array(collect_list(col("pos"))).as("ps")), minLen)
+      .select(col("doc_id"), col("ss"), col("es"))
 
   /** The common coverage-output tail: left-join the per-doc folded
     * duplication scalars onto the doc dimension and apply the
@@ -1152,18 +609,18 @@ object Dedup {
   def exactSubstrCoverageFromMarks(docs: DataFrame, marks: DataFrame,
                                    minLen: Int = 25): DataFrame =
     coverageOutput(docs, coverageFold(
-      marks.select(col("doc_id"), col("pos")), minLen, sliced = false))
+      marks.select(col("doc_id"), col("pos")), minLen))
 
   /** TRIM serve from incremental-state `marks` (r14 VERDICT #4 residual:
     * the state stored marks but only the coverage fold could serve, so
     * the incremental path could not emit trimmed text without a full
     * recompute). One tokenize pass over the corpus text — a cost ANY
     * trim pays, because the output IS text-sized — plus the marks join
-    * and the within-row merged-interval rebuild: no rank rounds, no
+    * and the within-row merged-interval rebuild: no window keys, no
     * gram explode, frozen grams never recomputed. Bit-equal to
     * [[exactSubstrTrim]] over the same corpus at the md5 grain (the
-    * registry's marks are the every-offset gram marks, which equal the
-    * rank marks by the coverage-equivalence theorem up to md5
+    * registry's marks are the every-offset md5-gram marks, which equal
+    * [[exactSubstrTrim]]'s exact window-class marks up to md5
     * collisions). `df` must be the frozen ∪ delta corpus the state was
     * folded from — extra rows trim nothing (no marks), missing rows
     * drop their output. */
@@ -1171,23 +628,19 @@ object Dedup {
                                marks: DataFrame,
                                minLen: Int = 25,
                                grain: String = "word"): DataFrame = {
-    val toks = tokenized(df, id, text, grain)
-    val perDoc = intervalsFromPs(
-      marks.groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(col("pos"))).as("ps")), minLen)
-      .select(col("doc_id"), col("ss"), col("es"))
-    quarantineAwareTrim(toks, perDoc, minLen, grain)
+    quarantineAwareTrim(tokenized(df, id, text, grain),
+      chainFold(marks.select(col("doc_id"), col("pos")), minLen), grain)
   }
 
   /** Frozen-corpus state for INCREMENTAL ExactSubstr (r13 VERDICT #4 —
-    * the last dedup operator without an incremental twin). Suffix-RANK
-    * tables are not mergeable (a rank class is an equality class over
-    * the WHOLE corpus; appending docs invalidates every class), so the
-    * honest incremental design is the repo's registry discipline
-    * ([[byteCdcIncremental]]): keep the every-offset md5 L-gram
-    * registry as mergeable state, probe it with each delta, and let a
-    * PERIODIC exact suffix-rank recompute ([[exactSubstrCoverage]] +
-    * a fresh state build) re-establish collision-freedom. By the
+    * the last dedup operator without an incremental twin). The exact
+    * window classes of [[exactSubstrSpans]] are rebuilt from every
+    * candidate's content, which a delta cannot extend without re-reading
+    * frozen text, so the incremental design is the repo's registry
+    * discipline ([[byteCdcIncremental]]): keep the every-offset md5
+    * L-gram registry as mergeable state, probe it with each delta, and
+    * let a PERIODIC exact recompute ([[exactSubstrCoverage]] + a fresh
+    * state build) re-establish collision-freedom. By the
     * coverage-equivalence theorem the gram formulation equals the
     * arbitrary-length exact result up to md5 collisions (~n²/2¹²⁸
     * corpus-wide — at 10¹² grams, ~10⁻¹⁵); the documented recompute
@@ -1208,7 +661,7 @@ object Dedup {
                            minLen: Int = 25, grain: String = "word")
       : (DataFrame, DataFrame, DataFrame) = {
     require(minLen >= 2)
-    // same grain contract as the rank family (r15 VERDICT #3): "byte"
+    // same grain contract as the exact family (r15 VERDICT #3): "byte"
     // addresses UTF-8 bytes via the hex-pair bijection — the daily-fold
     // twin of the released deduplicate-text-datasets transform
     val toks = tokenized(df, id, text, grain)
@@ -1247,7 +700,7 @@ object Dedup {
     * would silently duplicate `docs` rows and double-count grams in
     * the registry. The guard is one delta-sized left probe of the
     * frozen doc dimension that raise_errors on the first collision —
-    * the same loud-failure class as the rank path's doc_id range
+    * the same loud-failure class as the exact path's doc_id range
     * guard. */
   def exactSubstrIncremental(prevDocs: DataFrame, prevMarks: DataFrame,
                              prevRegistry: DataFrame, delta: DataFrame,
@@ -1299,7 +752,7 @@ object Dedup {
     val docs = prevDocs.unionByName(dDocs)
     // merged registry for the next delta: counts add; the unique-
     // occurrence slot is the least surviving occurrence (struct order
-    // is doc-major — the same total order the rank path packs)
+    // is doc-major — the same total order keep-first uses)
     val one = least(
       when(col("d1").isNotNull,
         struct(col("d1").as("doc_id"), col("p1").as("pos"))),

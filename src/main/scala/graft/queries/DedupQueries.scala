@@ -526,17 +526,17 @@ object DedupQueries {
               |FROM reach GROUP BY a""".stripMargin)),
 
     // TRUE arbitrary-length ExactSubstr (r12 VERDICT #5, the stretch):
-    // distributed prefix-doubling suffix ranks — collision-free span
+    // exact L-window classes (rolling window keys, verified on content
+    // inside each key bucket) — collision-free span
     // detection for ANY length >= 25, graded on PLANTED spans of length
     // 25, 50 and 200 at arbitrary (doc_id-derived) offsets: each %97
     // document contributes a clone holding tokens [o, o+len) of its
     // source, so the corpus contains known duplicated spans with
     // non-multiple-of-25 tails at both ends. The Spark side runs the
-    // suffix-rank algorithm (log2 L doubling rounds, equality-
-    // representative ranks, zero hashing); the oracle replays the
+    // filter-then-verify window classes (no md5); the oracle replays the
     // INDEPENDENT every-offset md5-gram formulation — the two agree by
     // the coverage-equivalence theorem in the operator's scaladoc, so a
-    // rank-class bug, a padding slip at short suffixes, or a tail
+    // class bug, a window-boundary slip at doc ends, or a tail
     // rounded to gram stride all hash-mismatch row-level.
     GraftQuery("d_exact_substr",
       (s, dir) => {
@@ -578,15 +578,13 @@ object DedupQueries {
              |       (t.n_tokens >= 1048576) AS quarantined
              |FROM t LEFT JOIN pd USING (doc_id)""".stripMargin)),
 
-    // Deep-round suffix ranks (r13): the SAME planted corpus at
-    // minLen=200 — seven doubling rounds (vs four at L=25) and a
-    // k=128/off=72 final shift, the depth where the rank path's
-    // L-independent per-position bytes beat the gram path's 200-token
-    // md5 per position (the documented crossover). Only the planted
+    // Long windows (r13): the SAME planted corpus at minLen=200, where
+    // the rolling keys cost the same per position as at L=25 while the
+    // gram path hashes 200 tokens per position. Only the planted
     // 200-spans (doc_id % 3 = 2) are long enough to surface, so the
-    // expected signal is sparse and the short-suffix -1 padding is
-    // stressed on every doc shorter than 128 tokens. Oracle: the
-    // independent every-offset 200-gram formulation.
+    // expected signal is sparse, and every doc shorter than 200 tokens
+    // must yield no window at all. Oracle: the independent every-offset
+    // 200-gram formulation.
     GraftQuery("d_exact_substr_l200",
       (s, dir) => {
         val docs = Tables.documents(s, dir)
@@ -628,8 +626,8 @@ object DedupQueries {
              |FROM t LEFT JOIN pd USING (doc_id)""".stripMargin)),
 
     // Arbitrary-length ExactSubstr TRIM (r13): the removal transform on
-    // the same planted corpus as d_exact_substr — the suffix-rank
-    // machinery feeds dupSpanTrim's within-row merged-interval rebuild,
+    // the same planted corpus as d_exact_substr — the exact window
+    // classes feed dupSpanTrim's within-row merged-interval rebuild,
     // so spans of length 25/50/200 at arbitrary offsets are REMOVED
     // (not just measured) with collision-free detection. The oracle is
     // the independent every-offset md5-gram formulation + exploded
@@ -730,7 +728,7 @@ object DedupQueries {
     // rule — each duplicated window class keeps its minimum
     // (doc_id, pos) occurrence — must be grain-independent, and this
     // grades it over byte hex pairs: grain="byte" tokenizes to 2-nibble
-    // hex tokens, the rank build addresses BYTES, and the oracle
+    // hex tokens, detection addresses BYTES, and the oracle
     // replays the argmin over every-BYTE-offset md5 windows of the hex
     // encoding (hex-pair windows group byte windows exactly — the
     // d_exact_substr_utf8 bijection). The corpus (documents ∪ char
@@ -795,12 +793,9 @@ object DedupQueries {
              |       (t.n_tokens >= 1048576) AS quarantined
              |FROM t LEFT JOIN kept k ON k.doc_id = t.doc_id""".stripMargin)),
 
-    // KEEP-ONE-COPY over the SEGMENTED giant (r15 VERDICT #4): the
-    // 2^20-token book participates in keep-first trimming, and the
-    // winner stays the UNSEGMENTED argmin — the engine computes the
-    // class min over DECODED (original doc, original pos), never the
-    // synthetic segment ids (which sort after every direct id and
-    // would otherwise hand every mixed class to the small doc). On
+    // KEEP-ONE-COPY over the giant (r15 VERDICT #4): the 2^20-token
+    // book participates in keep-first trimming, and the winner is the
+    // class argmin over (doc_id, pos) for every row, giant included. On
     // this corpus doc 0 (id 0) beats the giant (id 2e9) for every
     // shared span, so doc 0 survives INTACT while the giant trims to
     // its junction-window residue — the oracle replays the same argmin
@@ -861,7 +856,7 @@ object DedupQueries {
     // pathological book-length doc can no longer kill a corpus
     // ExactSubstr run. The corpus is d_exact_substr's planted set PLUS
     // a synthetic giant — doc 0's text repeated past the 2^20-token
-    // repr-packing width (doc_id 2e9). The run COMPLETES: the giant
+    // quarantine width (doc_id 2e9). The run COMPLETES: the giant
     // surfaces flagged quarantined=true with NULL measures, its content
     // neither marks nor is marked (doc 0's own coverage is unchanged
     // even though the giant replicates it R times), and every other
@@ -916,12 +911,11 @@ object DedupQueries {
              |       (t.n_tokens >= 1048576) AS quarantined
              |FROM t LEFT JOIN pd USING (doc_id)""".stripMargin)),
 
-    // Over-width SEGMENTATION (r14 VERDICT #2: quarantine keeps the run
+    // Book-width coverage (r14 VERDICT #2: quarantine keeps the run
     // alive but leaves a book's duplication unexamined): the SAME
     // giant-bearing corpus as d_exact_substr_quarantine, run through
-    // exactSubstrCoverageSegmented — the giant is cut into overlap
-    // segments (synthetic rank units), its marks decode back, and its
-    // duplicated spans ARE detected: the giant is doc 0's text repeated
+    // exactSubstrCoverageSegmented — whose width admits the giant, so
+    // its duplicated spans ARE detected: the giant is doc 0's text repeated
     // R times, so (unlike the quarantine entry, where both read
     // inert/NULL) doc 0 must now read near-fully covered and the giant
     // itself near-fully self-covered. Oracle: the every-offset replay
@@ -981,10 +975,10 @@ object DedupQueries {
              |       (t.n_tokens > 1073716248) AS quarantined
              |FROM t LEFT JOIN pd USING (doc_id)""".stripMargin)),
 
-    // Segmented TRIM (r15): the giant is REMOVED from, not just
-    // measured — the segmented rank build marks its duplicated window
+    // Book-width TRIM (r15): the giant is REMOVED from, not just
+    // measured — detection marks its duplicated window
     // starts (here: everything, the giant being doc 0 repeated R
-    // times), marks decode back, and the r15 complement-interval
+    // times), and the r15 complement-interval
     // rebuild reassembles survivors in O(n + intervals) where the old
     // per-token exists() scan would have paid ~n²/g on a fully-covered
     // 2^20-token doc. Giant and doc 0 both trim to '' (each fully
@@ -1038,12 +1032,10 @@ object DedupQueries {
 
     // BYTE-grain ExactSubstr (r13 VERDICT #3, the last fidelity delta
     // with Lee et al. §4.1, which dedups byte sequences where the word
-    // path dedups space-split tokens): the SAME suffix-rank machinery
-    // at single-character positions — rank_1's class dimension is
-    // alphabet-sized (broadcasts instead of shuffling), positions are
-    // ~5x the word count for the same corpus (priced in SCALE.md), and
-    // minLen=40 CHARS exercises the k=32/off=8 final-shift path over
-    // five doubling rounds. Planted: each %89 doc contributes a clone
+    // path dedups space-split tokens): the SAME exact window classes
+    // at single-character positions — positions are ~5x the word count
+    // for the same corpus (priced in SCALE.md), and windows are
+    // minLen=40 CHARS. Planted: each %89 doc contributes a clone
     // of chars [o, o+len) at char offsets derived from its id, len in
     // {40, 90, 200} — substring duplicates that word grain cannot even
     // express (they cut mid-word). Oracle: the independent every-
@@ -1225,7 +1217,7 @@ object DedupQueries {
              |FROM t LEFT JOIN pd USING (doc_id)""".stripMargin)),
 
     // INCREMENTAL ExactSubstr (r13 VERDICT #4, the last dedup operator
-    // without an incremental twin): suffix-rank tables are not
+    // without an incremental twin): exact window classes are not
     // mergeable, so the fold is the gram-registry discipline — frozen
     // state (docs/marks/registry parquet, built once) + one delta
     // probe, frozen text never re-read. The delta exercises BOTH
@@ -1304,7 +1296,7 @@ object DedupQueries {
     // INCREMENTAL TRIM serve (r14 VERDICT residual #4 → r15 directive
     // #6): the gram-registry state stored `marks` but could only serve
     // coverage — exactSubstrTrimFromMarks now emits TRIMMED TEXT from
-    // the same state with no rank rounds and no gram explode (one
+    // the same state with no window keys and no gram explode (one
     // tokenize pass over the corpus text — the cost any trim pays —
     // plus the marks join and the within-row interval rebuild). Same
     // frozen state + delta as d_exact_substr_incremental (the Scratch

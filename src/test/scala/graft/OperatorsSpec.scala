@@ -2109,104 +2109,6 @@ class OperatorsSpec extends SparkSpec {
     assert(trim(5L)._2 == 60L, s"giant n_removed ${trim(5L)._2}")
   }
 
-  test("shiftedRank: sliced window lead ≡ whole-doc lead, dense carries at B = 8") {
-    import spark.implicits._
-    // r15 VERDICT #8 pin: the sliced lead must equal the whole-doc
-    // window bit-for-bit — every boundary case forced by B = 8 on docs
-    // of lengths 1, 7, 8, 9, 16, 17, 30 (slice ends at, before, and
-    // after doc ends; carries shorter than k at the tail) across k
-    // values spanning the real doubling range.
-    val rows = for {
-      (id, n) <- Seq((1L, 1), (2L, 7), (3L, 8), (4L, 9), (5L, 16),
-        (6L, 17), (7L, 30))
-      p <- 1 to n
-    } yield (id, p.toLong, (id * 31 + p * 17) % 11) // arbitrary ranks
-    val r = rows.toDF("doc_id", "pos", "rank")
-    for (k <- Seq(1, 2, 4, 5, 7)) {
-      val byDoc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("pos"))
-      val whole = r.select(col("doc_id"), col("pos"),
-          col("rank").as("r1"),
-          lead(col("rank"), k).over(byDoc).as("r2"))
-        .collect().map(x => (x.getLong(0), x.getLong(1)) ->
-          ((x.getLong(2), if (x.isNullAt(3)) null else x.getLong(3)))).toMap
-      val sliced = graft.operators.Dedup.shiftedRank(r, k, b = 8L)
-        .collect().map(x => (x.getLong(0), x.getLong(1)) ->
-          ((x.getLong(2), if (x.isNullAt(3)) null else x.getLong(3)))).toMap
-      assert(sliced == whole, s"k=$k: sliced lead diverges from whole-doc")
-    }
-  }
-
-  test("multiShiftedRank: sliced multi-offset leads ≡ whole-doc leads at B = 8") {
-    import spark.implicits._
-    // r16: the widening stages ask ONE window pass for several leads;
-    // the sliced variant must equal the whole-doc window bit-for-bit
-    // with the carry sized to max(offsets) — same boundary battery as
-    // the single-offset pin.
-    val rows = for {
-      (id, n) <- Seq((1L, 1), (2L, 7), (3L, 8), (4L, 9), (5L, 16),
-        (6L, 17), (7L, 30))
-      p <- 1 to n
-    } yield (id, p.toLong, (id * 31 + p * 17) % 11)
-    val r = rows.toDF("doc_id", "pos", "rank")
-    for (offs <- Seq(Seq(1, 2, 3), Seq(2, 4, 6), Seq(1, 5, 7), Seq(3))) {
-      val byDoc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("pos"))
-      def key(row: org.apache.spark.sql.Row): ((Long, Long), Seq[Any]) =
-        (row.getLong(0), row.getLong(1)) ->
-          (2 until row.length).map(i =>
-            if (row.isNullAt(i)) null else row.getLong(i))
-      val whole = r.select(
-          Seq(col("doc_id"), col("pos"), col("rank").as("r1")) ++
-            offs.zipWithIndex.map { case (o, i) =>
-              lead(col("rank"), o).over(byDoc).as(s"r${i + 2}") }: _*)
-        .collect().map(key).toMap
-      val sliced = graft.operators.Dedup
-        .multiShiftedRank(r, offs, b = 8L)
-        .collect().map(key).toMap
-      assert(sliced == whole, s"offs=$offs: sliced leads diverge")
-    }
-  }
-
-  test("widenStage(j) rank classes ≡ composed doubling rounds") {
-    import spark.implicits._
-    // r16: one j-ary widening stage must produce EXACTLY the rank
-    // partition that the doubling composition produces at the same
-    // width — classes are compared as partitions of the position set
-    // (representative values may differ between formulations; only
-    // equality structure is contractual).
-    val docs = Seq(
-      (1L, "a b c a b c a b x y a b c"),
-      (2L, "b c a b c z a b c a b"),
-      (3L, "x y a b"),
-      (4L, "a"))
-    val positions = docs.toDF("doc_id", "text")
-      .select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("p0", "tok")))
-      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
-        col("tok"))
-    val repr = col("doc_id") * (1L << 20) + col("pos")
-    val r1 = positions.join(
-        positions.groupBy("tok").agg(min(repr).as("rank")), "tok")
-      .select(col("doc_id"), col("pos"), col("rank")).localCheckpoint()
-    def classesOf(r: org.apache.spark.sql.DataFrame): Set[Set[(Long, Long)]] =
-      r.collect().map(x => (x.getLong(2), (x.getLong(0), x.getLong(1))))
-        .groupBy(_._1).values.map(_.map(_._2).toSet).toSet
-    // width 4: doubling twice vs one j=4 stage
-    val doubled4 = graft.operators.Dedup.doublingRound(
-      graft.operators.Dedup.doublingRound(r1, 1).localCheckpoint(), 2)
-    val widened4 = graft.operators.Dedup.widenStage(r1, 1L, 4)
-    assert(classesOf(widened4) == classesOf(doubled4),
-      "j=4 widening diverges from two doubling rounds")
-    // width 8 from width 4: one more doubling vs j=2 on the widened
-    val doubled8 = graft.operators.Dedup.doublingRound(
-      doubled4.localCheckpoint(), 4)
-    val widened8 = graft.operators.Dedup.widenStage(
-      widened4.localCheckpoint(), 4L, 2)
-    assert(classesOf(widened8) == classesOf(doubled8),
-      "width-8 classes diverge between formulations")
-  }
-
   test("exactSubstr grain inits: char/byte numeric rank ≡ word-style groupBy rank classes") {
     import spark.implicits._
     // r16: char/byte grains replace the rank_1 min-representative
@@ -2324,6 +2226,72 @@ class OperatorsSpec extends SparkSpec {
     val plain = graft.operators.Dedup.exactSubstrCoverage(
       docs, col("doc_id"), col("text"), minLen = 25).collect().toSet
     assert(seg == plain)
+  }
+
+  test("WindowKeys: one key per window start, equal windows share a key, codegen == eval") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    def keys(toks: Seq[String], len: Int): Seq[Long] =
+      graft.plans.WindowKeys.ofTokens(ArrayData.toArrayData(
+        toks.map(UTF8String.fromString).toArray), len).toLongArray().toSeq
+    val k = keys(Seq("a", "b", "c", "a", "b", "c", "d"), 3)
+    assert(k.length == 5)
+    assert(k(0) == k(3), "equal windows 'a b c' keyed apart")
+    assert(k.distinct.length == 4, s"unequal windows collided: $k")
+    assert(keys(Seq("a", "b"), 3).isEmpty)
+    // byte grain: a byte string keys like the token array of its bytes'
+    // windows (equal byte windows, equal keys), rolled across the row
+    val bk = graft.plans.WindowKeys.ofBytes("xyzxyz".getBytes("UTF-8"), 3)
+      .toLongArray()
+    assert(bk.length == 4 && bk(0) == bk(3) && bk(0) != bk(1))
+    // the generated-code path returns exactly what the static kernel does
+    val rows = Seq(Seq("a", "b", "c", "a", "b", "c", "d"), Seq("q"), Seq.empty[String])
+    val got = rows.toDF("w").select(org.apache.spark.sql.GraftShims.column(
+        graft.plans.WindowKeysExpr(
+          org.apache.spark.sql.GraftShims.expression(col("w")), 3)))
+      .collect().map(_.getSeq[Long](0)).toSeq
+    assert(got == rows.map(keys(_, 3)))
+  }
+
+  test("exactSubstr key collisions: a 4-bit key mask changes no result at any grain") {
+    // the (key, content) regroup is what makes detection exact: with the
+    // window keys masked to 4 bits nearly every bucket mixes unequal
+    // windows, and coverage, trim and keep-first trim must still equal
+    // the full-key run row for row
+    val docs = Tables.documents(spark, testDataDir)
+      .select(col("doc_id"), col("text")).limit(60)
+    val clones = docs.filter(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        expr("substring(text, 7, 400)").as("text"))
+    val corpus = docs.unionByName(clones)
+    for ((grain, minLen) <- Seq(("word", 25), ("char", 40), ("byte", 40));
+         (trim, keepFirst) <- Seq((false, false), (true, false), (true, true))) {
+      def run(mask: Long) = Dedup.exactSubstrSpans(corpus, col("doc_id"),
+          col("text"), minLen, grain, widthLimit = 1L << 20, trim = trim,
+          keepFirst = keepFirst, keyMask = mask)
+        .collect().toSet
+      val full = run(-1L)
+      // column 2 is n_dup_starts (coverage) or n_removed (trims)
+      assert(full.exists(r => !r.isNullAt(2) && r.getLong(2) > 0L),
+        s"grain=$grain: nothing duplicated, the comparison is vacuous")
+      assert(run(0xFL) == full,
+        s"grain=$grain trim=$trim keepFirst=$keepFirst: key collisions leaked")
+    }
+  }
+
+  test("exactSubstr coverage and trim leave no persisted blocks") {
+    // detection runs as one plan per write: nothing is checkpointed or
+    // cached, so nothing can outlive the write in block storage
+    val docs = Tables.documents(spark, testDataDir)
+      .select(col("doc_id"), col("text")).limit(120)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Dedup.exactSubstrCoverage(docs, col("doc_id"), col("text"))
+      .write.format("noop").mode("overwrite").save()
+    Dedup.exactSubstrTrim(docs, col("doc_id"), col("text"))
+      .write.format("noop").mode("overwrite").save()
+    val gained = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(gained.isEmpty, s"persisted RDDs left behind: $gained")
   }
 
   test("exactSubstrTrimFromMarks: incremental trim serve == batch trim over frozen ∪ delta") {
@@ -3320,53 +3288,5 @@ class OperatorsSpec extends SparkSpec {
     // spot-pin one anchor: user 8 (most frequent, most recent, biggest
     // spender) is (1,1,1); users 7,8 share it → n_users 2, value 32+24.5
     assert(parity.contains((1, 1, 1, 2L, 56.5)))
-  }
-
-  // adversarial random mark sets for the r17 sliced fold equivalences:
-  // clustered runs, isolated marks, slice-boundary straddlers — with a
-  // tiny slice width (b = 8) so every boundary case fires on small data
-  private def randomMarks(seed: Long): org.apache.spark.sql.DataFrame = {
-    val rnd = new scala.util.Random(seed)
-    import spark.implicits._
-    (0 until 40).flatMap { d =>
-      var pos = 1L + rnd.nextInt(3)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      while (pos < 120) {
-        buf += ((d.toLong, pos))
-        // gaps cluster around the chain threshold (L = 5): 1..9 hits
-        // both "same chain" and "new chain" across slice cuts at 8
-        pos += 1 + rnd.nextInt(9)
-      }
-      buf
-    }.toDF("doc_id", "pos")
-  }
-
-  test("sliced two-level coverage fold == whole-doc fold (r17)") {
-    for (seed <- Seq(1L, 2L, 3L)) {
-      val marks = randomMarks(seed).localCheckpoint()
-      val plain = graft.operators.Dedup
-        .coverageFold(marks, minLen = 5, sliced = false)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val sliced = graft.operators.Dedup
-        .coverageFold(marks, minLen = 5, sliced = true, b = 8L)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(plain == sliced,
-        s"seed=$seed\nplain=$plain\nsliced=$sliced")
-    }
-  }
-
-  test("sliced distributed chain merge == within-row chain merge (r17)") {
-    for (seed <- Seq(1L, 2L, 3L)) {
-      val marks = randomMarks(seed).localCheckpoint()
-      def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => r.getLong(0) ->
-          (r.getSeq[Long](1).toList, r.getSeq[Long](2).toList)).toMap
-      val plain = asMap(graft.operators.Dedup
-        .chainFold(marks, minLen = 5, sliced = false))
-      val sliced = asMap(graft.operators.Dedup
-        .chainFold(marks, minLen = 5, sliced = true, b = 8L))
-      assert(plain == sliced,
-        s"seed=$seed\nplain=$plain\nsliced=$sliced")
-    }
   }
 }

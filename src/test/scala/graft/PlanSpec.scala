@@ -754,16 +754,15 @@ class PlanSpec extends SparkSpec {
       s"temperature gate not map-only:\n$tp")
   }
 
-  test("suffix-rank doubling round: two executed exchanges, class exchange reused") {
+  test("exactSubstr detection: one window-key exchange, reused; no window below the fold") {
     import spark.implicits._
-    // r13 VERDICT #8: the window-lead rewrite's whole value is "two
-    // hash exchanges per doubling round" — the window's doc_id hash
-    // plus ONE (r1, r2) class hash that ReuseExchange shares between
-    // the class-map groupBy and the join probe. Pin it under the AT-
-    // SCALE join regime (broadcast off — at real corpus size the class
-    // map is corpus-sized and can never broadcast): a Spark upgrade
-    // that stops reusing the groupBy's exchange would re-shuffle the
-    // rank table a third time and multiply the whole build ~1.5x.
+    // the filter-then-verify engine ships every window's key through ONE
+    // hash exchange — an explicit repartition that ReuseExchange shares
+    // between the bucket count and the join back — and runs no window
+    // function until the per-doc coverage fold. Pinned under the at-scale
+    // join regime (broadcast off — at corpus size neither side of the
+    // key join can broadcast): a planner change that shuffles the key
+    // stream twice would re-ship every window of the corpus.
     val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val aqeBcast =
       spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
@@ -774,89 +773,24 @@ class PlanSpec extends SparkSpec {
         .map(i => (i, (1 to 30).map(t => s"w${(i * 7 + t) % 13}")
           .mkString(" ")))
         .toDF("doc_id", "text")
-      // rank_1 exactly as exactSubstrStarts builds it, checkpointed so
-      // the round's plan starts from a bare rank table as in the loop
-      val positions = docs
-        .select(col("doc_id"),
-          posexplode(split(col("text"), " ")).as(Seq("p0", "tok")))
-        .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
-          col("tok"))
-      val r1 = positions.join(
-          positions.groupBy("tok")
-            .agg(min(expr("doc_id * 1048576 + pos")).as("rank")), "tok")
-        .select("doc_id", "pos", "rank").localCheckpoint()
-      val round = graft.operators.Dedup.doublingRound(r1, 1)
-      round.collect()
-      val fin = round.queryExecution.executedPlan.toString
+      val cov = graft.operators.Dedup.exactSubstrCoverage(
+        docs, col("doc_id"), col("text"), minLen = 4)
+      cov.collect()
+      val fin = cov.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
       assert(fin.contains("isFinalPlan=true"), fin)
-      val real = "\\+- Exchange hashpartitioning.*?plan_id=(\\d+)".r
+      val keyShuffles = "\\+- Exchange hashpartitioning\\(key#\\d+L?, \\d+\\).*?plan_id=(\\d+)".r
         .findAllMatchIn(fin).map(_.group(1)).toSet
-      assert(real.size <= 2,
-        s"doubling round grew a third exchange (${real.size}):\n$fin")
-      assert("ReusedExchange".r.findAllIn(fin).size >= 1,
-        s"(r1, r2) class exchange not reused:\n$fin")
-      // the shifted rank comes from ONE window lead, never a rank-table
-      // self-join on (doc_id, pos), and nothing range-partitions
-      assert("(?m)^[\\s:+\\-|*]*Window".r.findAllIn(fin).size == 1,
-        s"window count drifted:\n$fin")
+      assert(keyShuffles.size == 1,
+        s"${keyShuffles.size} window-key exchanges:\n$fin")
+      assert("ReusedExchange.*hashpartitioning\\(key#".r.findAllIn(fin).size == 1,
+        s"window-key exchange not reused:\n$fin")
+      // the one Window is the fold's running max; nothing range-partitions
+      val windows = "(?m)^[\\s:+\\-|*]*Window \\[.*$".r.findAllIn(fin).toList
+      assert(windows.size == 1 && windows.head.contains("max("),
+        s"windows beyond the per-doc fold:\n$fin")
       assert(!fin.contains("Exchange rangepartitioning"),
-        s"global sort inside a doubling round:\n$fin")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      aqeBcast match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None =>
-          spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
-    }
-  }
-
-  test("suffix-rank widening stage: two executed exchanges, one window, class exchange reused") {
-    import spark.implicits._
-    // r16: the widening stage keeps the doubling round's exchange
-    // budget — the window's doc_id hash plus ONE j-column class hash
-    // that ReuseExchange shares between the class-map groupBy and the
-    // join probe — while extending rank width k → j·k in one stage.
-    // Pinned at j = 5 (the L=25 production stage) under the at-scale
-    // join regime (broadcast off), like the doubling-round pin.
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqeBcast =
-      spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
-      val docs = (1L to 40L)
-        .map(i => (i, (1 to 30).map(t => s"w${(i * 7 + t) % 13}")
-          .mkString(" ")))
-        .toDF("doc_id", "text")
-      val positions = docs
-        .select(col("doc_id"),
-          posexplode(split(col("text"), " ")).as(Seq("p0", "tok")))
-        .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
-          col("tok"))
-      val r1 = positions.join(
-          positions.groupBy("tok")
-            .agg(min(expr("doc_id * 1048576 + pos")).as("rank")), "tok")
-        .select("doc_id", "pos", "rank").localCheckpoint()
-      val stage = graft.operators.Dedup.widenStage(r1, 1L, 5)
-      stage.collect()
-      val fin = stage.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      assert(fin.contains("isFinalPlan=true"), fin)
-      val real = "\\+- Exchange hashpartitioning.*?plan_id=(\\d+)".r
-        .findAllMatchIn(fin).map(_.group(1)).toSet
-      assert(real.size <= 2,
-        s"widening stage grew a third exchange (${real.size}):\n$fin")
-      assert("ReusedExchange".r.findAllIn(fin).size >= 1,
-        s"j-column class exchange not reused:\n$fin")
-      // the four leads come from ONE window pass, and nothing
-      // range-partitions
-      assert("(?m)^[\\s:+\\-|*]*Window".r.findAllIn(fin).size == 1,
-        s"window count drifted:\n$fin")
-      assert(!fin.contains("Exchange rangepartitioning"),
-        s"global sort inside a widening stage:\n$fin")
+        s"global sort in detection:\n$fin")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
       aqeBcast match {

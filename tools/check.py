@@ -2,11 +2,16 @@
 """Local mimic of the driver's DuckDB-oracle correctness gate.
 
 Usage: python3 tools/check.py <sfDir> <outDir>
+       python3 tools/check.py --compare <dumpA> <dumpB>
 
 Reads <outDir>/oracle_sql.json (written by graft.Verify), registers every
 parquet table in <sfDir> as a DuckDB view, runs each oracle SQL, and compares
 against the Spark result parquet at <outDir>/<name>/ — column names (sorted),
 row count, and a hash over row-sorted, column-name-sorted values.
+
+With --compare, diffs two graft.Verify dumps the same way, query by query
+(the plan-invariance check: one dump per planner setting, e.g. AQE off or one
+shuffle partition, must match another row for row).
 """
 import gc, json, sys, hashlib, math, os
 import duckdb
@@ -139,5 +144,35 @@ def main(sf_dir, out_dir):
     sys.exit(1 if fail else 0)
 
 
+def compare(dump_a, dump_b):
+    def queries(d):
+        return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+    qa, qb = queries(dump_a), queries(dump_b)
+    same = diff = 0
+    for name in sorted(qa | qb):
+        if name not in qa or name not in qb:
+            print(f"✗ {name}: only in {dump_a if name in qa else dump_b}")
+            diff += 1
+            continue
+        a, b = (canon(pq.read_table(os.path.join(d, name)).to_pandas())
+                for d in (dump_a, dump_b))
+        if list(a.columns) != list(b.columns):
+            print(f"✗ {name}: columns {list(a.columns)} != {list(b.columns)}")
+        elif len(a) != len(b):
+            print(f"✗ {name}: rows {len(a)} != {len(b)}")
+        elif h(a) != h(b):
+            print(f"✗ {name}: value hash mismatch")
+        else:
+            print(f"✓ {name}: {len(a)} rows identical")
+            same += 1
+            continue
+        diff += 1
+    print(f"\n{same} identical, {diff} differ")
+    sys.exit(1 if diff else 0)
+
+
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    if sys.argv[1] == "--compare":
+        compare(sys.argv[2], sys.argv[3])
+    else:
+        main(sys.argv[1], sys.argv[2])

@@ -13,6 +13,19 @@ object Env {
     * session, 4 when unset. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(parseCpus)
 
+  /** `SPARK_GRAFT_CC_SMALL_EDGES`: the driver-gather ceiling, 131,072 when
+    * unset. A graph or id set of at most this many rows is collected and
+    * worked on the driver in one pass; a larger one stays distributed.
+    * `Dedup.connectedComponents` compares its canonical edge count and
+    * `IdentifierDim` its distinct identifier count against it; 0 keeps
+    * both on their distributed paths.
+    *
+    * Driver memory at the default: 131,072 edges × 2 longs ≈ 2 MiB of id
+    * payload (string ids cost their UTF-8 bytes instead); the collected
+    * rows, the boxed ids and the sort over 2·E endpoints add transient JVM
+    * object overhead of a small multiple of that. */
+  def driverGatherCeiling: Long = long("SPARK_GRAFT_CC_SMALL_EDGES", 131072L)
+
   /** `SPARK_GRAFT_ONLY`: comma-separated query names, empty (all) when unset. */
   def only: Set[String] = parseNames(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))
 

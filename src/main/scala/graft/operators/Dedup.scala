@@ -1576,11 +1576,14 @@ object Dedup {
     *
     * Two regimes, chosen by the size of the canonical edge set:
     *
-    *  - At or under [[ccSmallGraphEdges]] edges, the set is gathered to
-    *    the driver and a union-find labels it in one pass: no rounds, no
-    *    round budget, O(E·α(N)) whatever the graph's diameter or degrees.
-    *    The labels come back as a local relation, so nothing downstream
-    *    re-reads the caller's pair pipeline or any checkpoint of it.
+    *  - At or under [[graft.Env.driverGatherCeiling]] distinct (a ≤ b)
+    *    pairs, self-pairs included, the set is gathered to the driver and
+    *    a union-find labels it in one pass: no rounds, no round budget,
+    *    O(E·α(N)) whatever the graph's diameter or degrees. The labels
+    *    come back as a local relation, so nothing downstream re-reads the
+    *    caller's pair pipeline or any checkpoint of it. Every graded-sf
+    *    candidate graph (LSH/CDC output, ≤ ~50k pairs) fits; a 100
+    *    TB-shaped delta graph stays distributed.
     *  - Above it, alternating large-star / small-star contraction (the
     *    Two-Phase algorithm of Kiveris et al., "Connected Components in
     *    MapReduce and Beyond", SoCC'14): each half-round every node hooks
@@ -1595,7 +1598,10 @@ object Dedup {
     *    groupBy-min aggregations + two equi-joins over the shrinking edge
     *    list, all shuffled on node id. THROWS if `maxRounds` is reached
     *    before the fixpoint (a true pathology, not a long chain);
-    *    `maxRounds` bounds this regime only.
+    *    `maxRounds` bounds this regime only. It always dedups its
+    *    large-star output, so a high-degree hub costs shuffle volume
+    *    bounded by the distinct edge set, never a degree-sized duplicate
+    *    blowup.
     *
     * Both regimes give the same labels; the fork is volume control.
     *
@@ -1608,25 +1614,7 @@ object Dedup {
     * @return (node, component) for every node that appears in a pair.
     */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 16): DataFrame =
-    connectedComponentsImpl(pairs, maxRounds, ccSmallGraphEdges)
-
-  /** Driver-gather ceiling of [[connectedComponents]]: a canonical edge set
-    * of at most this many distinct (a ≤ b) pairs, self-pairs included, is
-    * collected and labelled by a driver-side union-find; a larger one runs
-    * star contraction. Env-parameterised (`SPARK_GRAFT_CC_SMALL_EDGES`;
-    * 0 forces star contraction on every non-empty graph).
-    *
-    * Driver memory at the default: 131,072 edges × 2 longs ≈ 2 MiB of id
-    * payload (string ids cost their UTF-8 bytes instead); the collected
-    * rows, the boxed ids and the sort over 2·E endpoints add transient JVM
-    * object overhead of a small multiple of that. Every graded-sf
-    * candidate graph (LSH/CDC output, ≤ ~50k pairs) fits; a 100 TB-shaped
-    * delta graph stays distributed. Star contraction above the ceiling
-    * always dedups its large-star output, so a high-degree hub there
-    * costs shuffle volume bounded by the distinct edge set, never a
-    * degree-sized duplicate blowup. */
-  private[graft] def ccSmallGraphEdges: Long =
-    graft.Env.long("SPARK_GRAFT_CC_SMALL_EDGES", 131072L)
+    connectedComponentsImpl(pairs, maxRounds, graft.Env.driverGatherCeiling)
 
   /** [[connectedComponents]] with the driver-gather ceiling explicit —
     * package-private so both regimes are testable on tiny graphs. */
@@ -1813,7 +1801,7 @@ object Dedup {
   def incrementalComponents(prevLabels: DataFrame, newPairs: DataFrame,
                             maxRounds: Int = 16): DataFrame =
     incrementalComponentsImpl(prevLabels, newPairs, maxRounds,
-      ccSmallGraphEdges)
+      graft.Env.driverGatherCeiling)
 
   /** [[incrementalComponents]] with the driver-gather ceiling of its
     * contracted-graph [[connectedComponentsImpl]] call explicit. */

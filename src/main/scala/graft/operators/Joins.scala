@@ -73,9 +73,7 @@ object Joins {
             col("parent").isNull.as("settled"))
       }
     var m = init.localCheckpoint()
-    val growth = jumpsPerRound.max(1) + 1
-    val rounds = math.max(1,
-      math.ceil(math.log(maxDepth.max(2).toDouble + 1) / math.log(growth)).toInt + 1)
+    val (growth, rounds) = rootRounds(maxDepth, jumpsPerRound)
     var allSettled = false
     var round = 0
     while (!allSettled && round < rounds) {
@@ -102,12 +100,65 @@ object Joins {
       allSettled = m.filter(!col("settled")).isEmpty
       round += 1
     }
-    if (!allSettled)
-      throw new IllegalStateException(
-        s"resolveRoots did not converge: chain deeper than " +
-          s"~${math.pow(growth, rounds).toLong - 1} " +
-          s"(maxDepth=$maxDepth, rounds=$rounds); raise maxDepth")
+    if (!allSettled) throw rootsNotConverged(maxDepth, jumpsPerRound)
     m.select(col("node"), col("anc").as("root"))
+  }
+
+  /** [[resolveRoots]] with `edgesCoverAllNodes`, walked on the driver: the
+    * same (node, root) pairs for the same non-null edges `parentOf` (child
+    * → parent, None for a chain head), and the same failure. A parent
+    * that is not itself a child is a root, as in the distributed walk.
+    * The distributed walk settles every chain shorter than
+    * growth^rounds steps ([[rootRounds]]) and throws otherwise; this walk
+    * measures each chain's length and throws exactly then, which also
+    * catches a cycle, whose chain never ends. O(nodes) with memoised
+    * (root, depth) per node. */
+  private[graft] def resolveRootsOnDriver(
+      parentOf: collection.Map[Long, Option[Long]], maxDepth: Int,
+      jumpsPerRound: Int): Map[Long, Long] = {
+    val (growth, rounds) = rootRounds(maxDepth, jumpsPerRound)
+    val limit = math.pow(growth, rounds).toLong
+    val memo = collection.mutable.HashMap.empty[Long, (Long, Long)]
+    val path = collection.mutable.ArrayBuffer.empty[Long]
+    parentOf.keys.foreach { start =>
+      path.clear()
+      var x = start
+      var end: (Long, Long) = null // (root, depth) where the walk stopped
+      while (end == null) memo.get(x) match {
+        case Some(rd) => end = rd
+        case None => parentOf.get(x).flatten match {
+          case Some(p) =>
+            path += x
+            if (path.length >= limit)
+              throw rootsNotConverged(maxDepth, jumpsPerRound)
+            x = p
+          case None => end = (x, 0L) // a chain head, or a parent with no row
+        }
+      }
+      var depth = end._2
+      path.reverseIterator.foreach { n =>
+        depth += 1
+        if (depth >= limit) throw rootsNotConverged(maxDepth, jumpsPerRound)
+        memo(n) = (end._1, depth)
+      }
+    }
+    parentOf.keys.iterator.map(n => n -> memo.get(n).fold(n)(_._1)).toMap
+  }
+
+  /** (growth per round, round budget) of the root resolve: every chain
+    * shorter than growth^rounds steps settles within the budget. */
+  private def rootRounds(maxDepth: Int, jumpsPerRound: Int): (Int, Int) = {
+    val growth = jumpsPerRound.max(1) + 1
+    (growth, math.max(1,
+      math.ceil(math.log(maxDepth.max(2).toDouble + 1) / math.log(growth)).toInt + 1))
+  }
+
+  private def rootsNotConverged(maxDepth: Int, jumpsPerRound: Int) = {
+    val (growth, rounds) = rootRounds(maxDepth, jumpsPerRound)
+    new IllegalStateException(
+      s"resolveRoots did not converge: chain deeper than " +
+        s"~${math.pow(growth, rounds).toLong - 1} " +
+        s"(maxDepth=$maxDepth, rounds=$rounds); raise maxDepth")
   }
 
   /** J3: bounded transitive closure — the identifier-family expansion

@@ -3,6 +3,7 @@ package graft.reports
 import graft.operators.Sessionize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** Incrementally-maintained sessionization state — the Spark answer to the
   * reference's incremental batch sessionizer (`metricselasticsearch.py:
@@ -16,8 +17,10 @@ import org.apache.spark.sql.functions._
   * the maintained view and the full recompute run the same code:
   *
   *  1. LOCAL: `Sessionize.withGapSeq` per (user, day), materialized as a
-  *     parquet table partitioned by day. A per-day event fingerprint
-  *     decides which day partitions to rebuild — a daily incremental run
+  *     parquet table partitioned by day. A per-day fingerprint — the day's
+  *     bronze file listing, or an event digest over any other source —
+  *     decides on the driver which day partitions to rebuild, and only
+  *     those days' events reach the window: a daily incremental run
   *     touches the new day (and any late-data days), never the history.
   *  2. GLOBAL: `Sessionize.mergeBuckets` renumbers from the per-(user, day)
   *     summary — one row per user-day, O(users × days), tiny — recomputed
@@ -29,18 +32,35 @@ object SessionGold {
 
   /** Rebuild changed day-partitions of the local-session table, delete
     * vanished days, refresh the (tiny) state — all via the shared
-    * [[GoldTables.incrementalOverwrite]] protocol. Returns
-    * (rebuilt, skipped, removed) day counts. */
+    * [[GoldTables.incrementalOverwrite]] protocol, which filters the events
+    * to the changed days before the per-(user, day) window runs. On a bare
+    * bronze scan the day is bronze's `event_date` partition column — the
+    * same `to_date(ts)` under a UTC session zone, which the bronze writer
+    * stamps it with — so the days' fingerprints come from the partition
+    * listing and the filter prunes whole directories. Returns (rebuilt,
+    * skipped, removed) day counts. */
   def build(spark: SparkSession, events: DataFrame, gapSeconds: Long,
             localPath: String, statePath: String): (Long, Long, Long) = {
     require(gapSeconds <= 86400L, "split-by-day needs gap <= 1 day")
-    val byDay = events.withColumn("event_day", to_date(col("ts")))
-    val local = Sessionize.withGapSeq(byDay,
-      Seq(col("user_id"), col("event_day")), col("ts"), col("event_id"),
-      gapSeconds, "local_seq")
+    val listed = events.columns.contains("event_date") &&
+      events.schema("event_date").dataType == DateType &&
+      GoldTables.listing(events, "event_date").isDefined && utcSession(spark)
+    val byDay = events.withColumn("event_day",
+      if (listed) col("event_date") else to_date(col("ts")))
     GoldTables.incrementalOverwrite(spark, byDay, "event_day",
       localPath, s"$statePath/days",
-      changed => local.join(changed, Seq("event_day"), "left_semi"))
+      rows => Sessionize.withGapSeq(rows,
+        Seq(col("user_id"), col("event_day")), col("ts"), col("event_id"),
+        gapSeconds, "local_seq"))
+  }
+
+  /** The session time zone is UTC (any zone fixed at offset zero), under
+    * which `to_date(ts)` is the UTC day. */
+  private def utcSession(spark: SparkSession): Boolean = {
+    val zone = org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+      spark.conf.get("spark.sql.session.timeZone"))
+    zone.getRules.isFixedOffset &&
+      zone.getRules.getOffset(java.time.Instant.EPOCH) == java.time.ZoneOffset.UTC
   }
 
   /** Globally-numbered sessions from the materialized local table: the

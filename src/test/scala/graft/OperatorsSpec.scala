@@ -496,7 +496,7 @@ class OperatorsSpec extends SparkSpec {
     // band self-join or any round checkpoint: those blocks would stay
     // reachable (held in storage) for as long as the frame is. Under the
     // driver-gather ceiling the labels are a local relation.
-    assume(Dedup.ccSmallGraphEdges >= 1000L,
+    assume(Env.driverGatherCeiling >= 1000L,
       "SPARK_GRAFT_CC_SMALL_EDGES forces star contraction on this corpus")
     val out = Dedup.nearDupComponents(replicatedDocs, col("doc_id"),
       col("text"), threshold = 0.3)
